@@ -159,18 +159,6 @@ object Bench {
       }
     }
 
-  /** JSON string escape for builder-authored text (the warn flag) —
-    * same contract as Verify's: quote, backslash, control chars. */
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   private def controlJson(
       results: Seq[(String, Option[Double], (Long, Long, Long, Long, Long))],
       sfDir: String, out: String, io: (Double, Double)): String = {
@@ -250,7 +238,8 @@ object Bench {
       s""""median_ratio_vs_prev":${medianRatio.fold("null")(num)},""" +
       s""""n_shared_queries":${ratios.size},""" +
       s""""in_band":$inBand,""" +
-      fullWarn.fold(""""warn":null""")(w => s""""warn":${jstr(w)}""") + "}"
+      fullWarn.fold(""""warn":null""")(
+        w => s""""warn":${Verify.q(w)}""") + "}"
   }
 
   // Cross-query scrub: SessionCaches.scrub drops catalog caches and

@@ -1,6 +1,11 @@
 package graft
 
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{
+  ApproximatePercentile, HyperLogLogPlusPlus, Percentile}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -180,5 +185,65 @@ class BucketingSpec extends SparkTestBase {
       assert(math.abs(approxP - exactP) / exactP < 0.02,
         s"$grp approx p50: $approxP vs $exactP")
     }
+  }
+
+  test("sketch aggregates group by the query's group columns, never by the distinct key") {
+    // Spark's single-distinct plan groups every other aggregate by the
+    // distinct key first: one HLL++/GK/percentile buffer per distinct
+    // key instead of one per group
+    object Plans extends AdaptiveSparkPlanHelper
+    val sketch: BaseAggregateExec => Boolean =
+      _.aggregateExpressions.exists(_.aggregateFunction match {
+        case _: HyperLogLogPlusPlus | _: Percentile |
+             _: ApproximatePercentile => true
+        case _ => false
+      })
+    val prio = Set("o_orderpriority")
+    val bad = Seq[(String, (SparkSession, String) => DataFrame, Set[String])](
+      ("g13", ops.Aggregates.g13ApproxStats, Set.empty),
+      ("g18", ops.Aggregates.g18GroupedApproxStats, prio),
+      ("g13b", ops.Aggregates.g13bApproxExactGate, Set.empty),
+      ("g18b", ops.Aggregates.g18bGroupedApproxGate, prio)
+    ).flatMap { case (name, q, by) =>
+      val df = q(spark, sfTest)
+      df.collect()
+      val aggs = Plans.collect(df.queryExecution.executedPlan) {
+        case a: BaseAggregateExec if sketch(a) =>
+          a.groupingExpressions.map(_.name).toSet
+      }
+      if (aggs.isEmpty) Seq(s"$name: no sketch aggregate in the plan")
+      else aggs.filterNot(_.subsetOf(by)).map(keys =>
+        s"$name: sketch aggregate grouped by ${keys.mkString(", ")}")
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("g13/g18 exact columns equal the one-aggregate form, row for row") {
+    // the form the queries had before the exact distinct count moved
+    // into its own aggregate
+    val g13 = Tables.lineitem(spark, sfTest).agg(
+      countDistinct("l_orderkey").as("exact_orders"),
+      approx_count_distinct("l_orderkey", 0.02).as("approx_orders"),
+      expr("percentile(l_extendedprice, 0.5)").as("exact_p50"),
+      expr("approx_percentile(l_extendedprice, 0.5, 10000)")
+        .as("approx_p50"))
+    val g18 = Tables.orders(spark, sfTest)
+      .groupBy("o_orderpriority")
+      .agg(
+        countDistinct("o_custkey").as("exact_custs"),
+        approx_count_distinct("o_custkey", 0.02).as("approx_custs"),
+        expr("percentile(o_totalprice, 0.5)").as("exact_p50"),
+        expr("approx_percentile(o_totalprice, 0.5, 10000)")
+          .as("approx_p50"))
+    def exact(df: DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSeq
+    assert(exact(ops.Aggregates.g13ApproxStats(spark, sfTest),
+      "exact_orders", "exact_p50") == exact(g13, "exact_orders", "exact_p50"))
+    def byPrio(df: DataFrame) =
+      exact(df, "o_orderpriority", "exact_custs", "exact_p50")
+        .map(r => r.head -> r.tail).toMap
+    val got = byPrio(ops.Aggregates.g18GroupedApproxStats(spark, sfTest))
+    assert(got.size == 5)
+    assert(got == byPrio(g18))
   }
 }
