@@ -3,6 +3,9 @@ package graft.parking
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+
+import graft.ops.Rounds
 
 /** The reference pipeline itself (SURVEY §3 entry points A/B/C),
   * re-expressed end-to-end on the actual parking-competition CSVs at
@@ -66,19 +69,36 @@ object ParkingPipeline {
 
   /** G4 — data-driven discovery of complex-level columns (R:174–191):
     * a column is complex-level iff the sum over complexes of its
-    * per-complex distinct-non-NA count is ≤ #complexes. Driver-side
-    * metadata: one 1-row aggregate, collected. */
+    * per-complex distinct-non-NA count is ≤ #complexes.
+    *
+    * Driver-side metadata from ONE shuffle and one eager action. The
+    * per-group distinct count is `size(collect_set(c))`: like
+    * `countDistinct`, it counts distinct non-null values, 0 for an
+    * all-null group. The key count and the per-column sums are folded
+    * per post-shuffle partition and merged on the driver, one small
+    * array per partition; a null key counts as one complex, as
+    * `distinct().count()` counted it. Under adaptive execution that is
+    * two jobs (the map side, then the fold), where a `countDistinct`
+    * per column (an `Expand` over three shuffles) plus a separate
+    * `distinct().count()` took seven; ParkingFixtureSpec keeps that
+    * form and pins that both agree. Whether `df` is cached is the
+    * caller's choice ([[withFeatureTable]] caches it while it builds
+    * the table). */
   def complexLevelColumns(df: DataFrame, key: String): Seq[String] = {
-    val others = df.columns.filterNot(_ == key)
+    val others = df.columns.filterNot(_ == key).toSeq
     val perGroup = df.groupBy(key)
-      .agg(countDistinct(col(others.head)).as(others.head),
-        others.tail.map(c => countDistinct(col(c)).as(c)).toSeq: _*)
-    val sums = perGroup
-      .agg(sum(col(others.head)).as(others.head),
-        others.tail.map(c => sum(col(c)).as(c)).toSeq: _*)
-      .head()
-    val nKeys = df.select(key).distinct().count()
-    key +: others.filter(c => sums.getAs[Long](c) <= nKeys).toSeq
+      .agg(size(collect_set(col(others.head))),
+        others.tail.map(c => size(collect_set(col(c)))): _*)
+    // (#keys, per-column sums): folded within each post-shuffle
+    // partition; the driver merges one array per partition
+    val totals = perGroup.rdd
+      .map(r => Array.tabulate(others.size + 1)(i =>
+        if (i == 0) 1L else r.getInt(i).toLong))
+      .fold(new Array[Long](others.size + 1))((a, b) =>
+        Array.tabulate(a.length)(i => a(i) + b(i)))
+    key +: others.zipWithIndex.collect {
+      case (c, i) if totals(i + 1) <= totals(0) => c
+    }
   }
 
   /** P1 + G5 — per-complex dimension table (R:194–196): project the
@@ -134,16 +154,19 @@ object ParkingPipeline {
   }
 
   /** C6 — [[weightedRentRaw]] + exact-median imputation (R:941–943,
-    * the ACTIVE imputation path of the reference). */
+    * the ACTIVE imputation path of the reference). Lazy: the one-row
+    * `percentile` aggregate is broadcast-cross-joined and coalesced
+    * from, so the medians are computed inside whichever job
+    * materializes the table, not by a driver `head()` at plan time. */
   def weightedRent(df: DataFrame): DataFrame = {
     val perComplexRent = weightedRentRaw(df)
     val meds = perComplexRent.agg(
-      expr("percentile(`임대보증금`, 0.5)"),
-      expr("percentile(`임대료`, 0.5)")).head()
-    perComplexRent
-      .withColumn("임대보증금",
-        coalesce(col("임대보증금"), lit(meds.getDouble(0))))
-      .withColumn("임대료", coalesce(col("임대료"), lit(meds.getDouble(1))))
+      expr("percentile(`임대보증금`, 0.5)").as("med_deposit"),
+      expr("percentile(`임대료`, 0.5)").as("med_rent"))
+    perComplexRent.crossJoin(broadcast(meds))
+      .select(col("단지코드"),
+        coalesce(col("임대보증금"), col("med_deposit")).as("임대보증금"),
+        coalesce(col("임대료"), col("med_rent")).as("임대료"))
   }
 
   /** The COMMENTED-OUT reference imputation (R:820–829
@@ -174,12 +197,19 @@ object ParkingPipeline {
   /** Entry point A+B (SURVEY §3.1–3.2): the full per-complex feature
     * table — dedup → enrich (area, bands, rents) → impute transit
     * NAs (C5, R:350–358) → derived ratios (C3, R:421–424). One lazy
-    * DAG; every join is a broadcast (423-row dimension side).
-    * `featureTableOf` takes an already-cleaned frame so the SAME
-    * enrichment runs on train.csv and (label-less) test.csv — the
-    * submission path needs both under one schema. */
-  def featureTableOf(cleaned0: DataFrame): DataFrame = {
-    val cleaned = cleaned0.cache()
+    * DAG apart from the single discovery job of
+    * [[complexLevelColumns]]; every join is a broadcast (one row per
+    * complex on the dimension side). `featureTableOf` takes an
+    * already-cleaned frame so the SAME enrichment runs on train.csv
+    * and (label-less) test.csv — the submission path needs both under
+    * one schema.
+    *
+    * Nothing here caches or materializes: the returned plan re-reads
+    * `cleaned` four times each time it runs. Entry points that run
+    * several actions on the table build it once through
+    * [[withFeatureTable]], which caches `cleaned` only while the table
+    * is built and releases the table before it returns. */
+  def featureTableOf(cleaned: DataFrame): DataFrame = {
     val dim = perComplex(cleaned)
     val enriched = dim
       .join(broadcast(totalArea(cleaned)), Seq("단지코드"))
@@ -189,6 +219,38 @@ object ParkingPipeline {
     enriched
       .withColumn("세대당주차면수", col("단지내주차면수") / col("총세대수"))
       .withColumn("대중교통수", col("지하철역수") + col("버스정류장수"))
+  }
+
+  /** Builds the feature table of `cleaned` once and runs `body` on it.
+    * `body` gets the lazy plan and the table materialized by
+    * [[graft.ops.Rounds.materialize]]; the table has one row per
+    * complex and stays distributed, nothing is collected.
+    *
+    * `cleaned` is cached for the discovery job and the table's own
+    * job, and unpersisted once the table exists, unless the caller
+    * had cached it (a cache is shared by every frame with the same
+    * plan, as ParkingSpec's cached `train` is). The table is released
+    * when `body` returns, so `body` must not return a frame that
+    * reads it: return one built on the plan instead.
+    *
+    * Why not `persist()`: the random forest is seeded, but its
+    * bagging depends on the partitions and row order of its input. A
+    * cached plan keeps the aggregate's shuffle partitions, while the
+    * un-cached plan is coalesced to fewer by adaptive execution, so a
+    * persisted table changes the predictions. An eager
+    * `localCheckpoint` runs the plan as its own adaptive query and
+    * keeps the partitioning the un-cached plan has. */
+  private[parking] def withFeatureTable[T](cleaned: DataFrame)(
+      body: (DataFrame, DataFrame) => T): T = {
+    val owned = cleaned.storageLevel == StorageLevel.NONE
+    if (owned) cleaned.cache()
+    val (plan, table) =
+      try {
+        val plan = featureTableOf(cleaned)
+        (plan, Rounds.materialize(plan))
+      } finally if (owned) cleaned.unpersist()
+    try body(plan, table)
+    finally Rounds.release(table)
   }
 
   def featureTable(s: SparkSession, path: String): DataFrame =
@@ -210,43 +272,58 @@ object ParkingPipeline {
     * 등록차량수, score RMSE / R² / MAPE on the held-out 20%.
     * (The reference's own numbers describe a buggy run — its
     * "apartment" model was fit on shop data, R:1036 — so these are
-    * capability parity, not bit targets; BASELINE.md caveats.) */
+    * capability parity, not bit targets; BASELINE.md caveats.)
+    *
+    * The table is built once ([[withFeatureTable]]) and released
+    * before return; the returned frame is a local relation of the six
+    * scores, so it does not read the table. */
   def fitAndScore(s: SparkSession, path: String): DataFrame = {
     import org.apache.spark.ml.Pipeline
-    import org.apache.spark.ml.evaluation.RegressionEvaluator
     import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssembler}
     import org.apache.spark.ml.regression.{LinearRegression, RandomForestRegressor}
-    val feats = featureTable(s, path)
-      .withColumnRenamed("등록차량수", "label")
-    val (train, test) = stratifiedSplit(feats)
-    val prep: Array[org.apache.spark.ml.PipelineStage] = Array(
-      new StringIndexer().setInputCol("지역").setOutputCol("region_idx")
-        .setStringOrderType("alphabetAsc").setHandleInvalid("keep"),
-      new OneHotEncoder().setInputCol("region_idx")
-        .setOutputCol("region_oh").setDropLast(true),
-      new VectorAssembler().setInputCols(numCols :+ "region_oh")
-        .setOutputCol("features"))
-    val ev = new RegressionEvaluator().setLabelCol("label")
-      .setPredictionCol("prediction")
-    def score(model: org.apache.spark.ml.PipelineModel,
-        name: String): Seq[(String, String, Double)] = {
-      val pred = model.transform(test)
-      val mape = pred.filter(col("label") =!= 0.0)
-        .agg(avg(abs((col("label") - col("prediction")) / col("label"))))
-        .head().getDouble(0)
-      Seq((name, "rmse", ev.setMetricName("rmse").evaluate(pred)),
-        (name, "r2", ev.setMetricName("r2").evaluate(pred)),
-        (name, "mape", mape))
+    withFeatureTable(clean(loadTrain(s, path))) { (_, table) =>
+      val (train, test) =
+        stratifiedSplit(table.withColumnRenamed("등록차량수", "label"))
+      val prep: Array[org.apache.spark.ml.PipelineStage] = Array(
+        new StringIndexer().setInputCol("지역").setOutputCol("region_idx")
+          .setStringOrderType("alphabetAsc").setHandleInvalid("keep"),
+        new OneHotEncoder().setInputCol("region_idx")
+          .setOutputCol("region_oh").setDropLast(true),
+        new VectorAssembler().setInputCols(numCols :+ "region_oh")
+          .setOutputCol("features"))
+      val lm = new Pipeline().setStages(prep :+
+        new LinearRegression().setLabelCol("label")
+          .setFeaturesCol("features").setSolver("normal")).fit(train)
+      val rf = new Pipeline().setStages(prep :+
+        new RandomForestRegressor().setLabelCol("label")
+          .setFeaturesCol("features").setNumTrees(50).setSeed(4)).fit(train)
+      def pred(m: org.apache.spark.ml.PipelineModel, name: String) =
+        m.transform(test).select(lit(name).as("model"), col("label"),
+          col("prediction"))
+      val scores = regressionScores(pred(lm, "lm").union(pred(rf, "rf")))
+        .collect()
+      import s.implicits._
+      scores.toSeq.sortBy(_.getString(0)).flatMap { r =>
+        Seq("rmse", "r2", "mape").map(m =>
+          (r.getString(0), m, r.getAs[Double](m)))
+      }.toDF("model", "metric", "value")
     }
-    val lm = new Pipeline().setStages(prep :+
-      new LinearRegression().setLabelCol("label")
-        .setFeaturesCol("features").setSolver("normal")).fit(train)
-    val rf = new Pipeline().setStages(prep :+
-      new RandomForestRegressor().setLabelCol("label")
-        .setFeaturesCol("features").setNumTrees(50).setSeed(4)).fit(train)
-    import s.implicits._
-    (score(lm, "lm") ++ score(rf, "rf"))
-      .toDF("model", "metric", "value")
+  }
+
+  /** RMSE, R² and MAPE per `model` of a (model, label, prediction)
+    * frame, in one aggregate. RMSE and R² follow
+    * `RegressionEvaluator` (R² = 1 − SSE / ((n − 1)·var_samp(label)));
+    * MAPE averages |(label − prediction) / label| over the rows with
+    * a non-zero label. ParkingFixtureSpec pins these against the
+    * evaluator. */
+  private[graft] def regressionScores(pred: DataFrame): DataFrame = {
+    val err = col("label") - col("prediction")
+    val sse = sum(err * err)
+    pred.groupBy("model").agg(
+      sqrt(sse / count(lit(1))).as("rmse"),
+      (lit(1.0) - sse / ((count(lit(1)) - 1) * var_samp(col("label"))))
+        .as("r2"),
+      avg(when(col("label") =!= 0.0, abs(err / col("label")))).as("mape"))
   }
 
   /** Numeric feature list shared by the model entry points. */
@@ -292,31 +369,39 @@ object ParkingPipeline {
   /** The competition artifact (R:1005–1016 / sample_submission.csv
     * shape): fit on the FULL training table, build the same feature
     * table from label-less test.csv, predict per complex, and write
-    * a (code, num) CSV via the S3 sink. Returns the submission frame
-    * (150 rows on the reference data). */
+    * a (code, num) CSV via the S3 sink.
+    *
+    * Each feature table is built once ([[withFeatureTable]]): the fit
+    * and the CSV write read the materialized tables, which are
+    * released before return. The returned submission frame (one row
+    * per test complex) is therefore the lazy plan: using it after the
+    * call recomputes the test table from test.csv, with the same
+    * fitted forest, so it holds the rows the CSV holds. */
   def submission(s: SparkSession, trainPath: String, testPath: String,
       outDir: Option[String] = None): DataFrame = {
     import org.apache.spark.ml.Pipeline
     import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssembler}
     import org.apache.spark.ml.regression.RandomForestRegressor
-    val train = featureTable(s, trainPath)
-      .withColumnRenamed("등록차량수", "label")
-    val test = featureTableOf(clean(loadTest(s, testPath)))
-    val prep: Array[org.apache.spark.ml.PipelineStage] = Array(
-      new StringIndexer().setInputCol("지역").setOutputCol("region_idx")
-        .setStringOrderType("alphabetAsc").setHandleInvalid("keep"),
-      new OneHotEncoder().setInputCol("region_idx")
-        .setOutputCol("region_oh").setDropLast(true),
-      new VectorAssembler().setInputCols(numCols :+ "region_oh")
-        .setOutputCol("features").setHandleInvalid("keep"))
-    val rf = new Pipeline().setStages(prep :+
-      new RandomForestRegressor().setLabelCol("label")
-        .setFeaturesCol("features").setNumTrees(50).setSeed(4)).fit(train)
-    val sub = rf.transform(test)
-      .select(col("단지코드").as("code"), col("prediction").as("num"))
-      .orderBy("code")
-    outDir.foreach(dir => graft.sources.CsvIO.writeCsv(sub, dir))
-    sub
+    withFeatureTable(clean(loadTrain(s, trainPath))) { (_, train) =>
+      withFeatureTable(clean(loadTest(s, testPath))) { (testPlan, test) =>
+        val prep: Array[org.apache.spark.ml.PipelineStage] = Array(
+          new StringIndexer().setInputCol("지역").setOutputCol("region_idx")
+            .setStringOrderType("alphabetAsc").setHandleInvalid("keep"),
+          new OneHotEncoder().setInputCol("region_idx")
+            .setOutputCol("region_oh").setDropLast(true),
+          new VectorAssembler().setInputCols(numCols :+ "region_oh")
+            .setOutputCol("features").setHandleInvalid("keep"))
+        val rf = new Pipeline().setStages(prep :+
+          new RandomForestRegressor().setLabelCol("label")
+            .setFeaturesCol("features").setNumTrees(50).setSeed(4))
+          .fit(train.withColumnRenamed("등록차량수", "label"))
+        def predict(t: DataFrame) = rf.transform(t)
+          .select(col("단지코드").as("code"), col("prediction").as("num"))
+          .orderBy("code")
+        outDir.foreach(dir => graft.sources.CsvIO.writeCsv(predict(test), dir))
+        predict(testPlan)
+      }
+    }
   }
 
   /** O3 — deterministic 80/20 split (R:962–992's seeded stratified
