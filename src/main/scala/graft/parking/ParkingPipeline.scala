@@ -1,6 +1,8 @@
 package graft.parking
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -101,73 +103,102 @@ object ParkingPipeline {
     }
   }
 
-  /** P1 + G5 — per-complex dimension table (R:194–196): project the
-    * complex-level columns, dedup to one row per complex. */
-  def perComplex(df: DataFrame): DataFrame = {
-    val cols = complexLevelColumns(df, "단지코드")
-    df.select(cols.map(col): _*).dropDuplicates("단지코드")
-  }
+  /** One `groupBy(단지코드)` of `df` over `aggs`. Each per-complex
+    * table below is this over its own aggregate expressions, each
+    * defined once, and [[complexAggregate]] is it over all of them. */
+  private def perKey(df: DataFrame, aggs: Seq[Column]): DataFrame =
+    if (aggs.isEmpty) df.select("단지코드").distinct()
+    else df.groupBy("단지코드").agg(aggs.head, aggs.tail: _*)
+
+  /** The complex-level columns other than the key, one value per
+    * complex: `first(c)` is what `dropDuplicates` plans, so the value
+    * is the one of the first row of the complex. */
+  private def firstOf(cols: Seq[String]): Seq[Column] =
+    cols.map(c => first(col(c)).as(c))
+
+  /** P1 + G5 — per-complex dimension table (R:194–196): the
+    * complex-level columns, one row per complex. */
+  def perComplex(df: DataFrame): DataFrame =
+    perKey(df, firstOf(complexLevelColumns(df, "단지코드").tail))
 
   /** C3 + G1 — total residential area per complex (R:264–272):
     * Σ 전용면적 × 전용면적별세대수. */
-  def totalArea(df: DataFrame): DataFrame =
-    df.groupBy("단지코드")
-      .agg(sum(col("전용면적") * col("전용면적별세대수")).as("총면적"))
+  private val totalAreaAgg: Column =
+    sum(col("전용면적") * col("전용면적별세대수")).as("총면적")
+
+  def totalArea(df: DataFrame): DataFrame = perKey(df, Seq(totalAreaAgg))
 
   /** Fixed band list 10..100 — pinned, unlike the reference's
     * data-dependent pivot (R:290–312), so train and test always share
     * a schema; the empty 090 band becomes an all-zero column. */
   val bands: Seq[Int] = (1 to 10).map(_ * 10)
 
-  /** C4 + V1 — area-band household histogram (R:290–315): R's
+  /** C4 + V1 — one household count per area band (R:290–315): R's
     * `round(전용면적, -1)` is half-to-EVEN → `bround`; clamp [10,100]
-    * (R:292–296 `pmax/pmin`); pivot with zero-fill and `str_pad`-style
-    * column names (R:306). */
-  def areaBandPivot(df: DataFrame): DataFrame = {
+    * (R:292–296 `pmax/pmin`); a band's count is the conditional sum
+    * of 전용면적별세대수 over its rows, 0 when it has none (the
+    * zero-filled pivot), under `str_pad`-style names (R:306). A row
+    * with a NULL 전용면적 has no band and counts in none. */
+  private val bandAggs: Seq[Column] = {
     val band = least(greatest(bround(col("전용면적"), -1), lit(10.0)),
       lit(100.0)).cast("int")
-    val pivoted = df.withColumn("band", band)
-      .groupBy("단지코드").pivot("band", bands)
-      .sum("전용면적별세대수")
-      .na.fill(0, bands.map(_.toString))
-    bands.foldLeft(pivoted) { (d, b) =>
-      d.withColumnRenamed(b.toString, f"전용면적_$b%03d")
-    }
+    bands.map(b => coalesce(sum(when(band === b, col("전용면적별세대수"))),
+      lit(0L)).as(f"전용면적_$b%03d"))
   }
 
-  /** V2 variant — the same pivot restricted to one building type
-    * (R:856–877 `split()` + per-group pivot ≡ filtered pivot). */
+  /** The area-band histogram: one aggregate of conditional sums, not
+    * a `pivot` (which plans a second aggregate over (complex, band)). */
+  def areaBandPivot(df: DataFrame): DataFrame = perKey(df, bandAggs)
+
+  /** V2 variant — the same histogram restricted to one building type
+    * (R:856–877 `split()` + per-group pivot ≡ filtered histogram). */
   def areaBandPivotFor(df: DataFrame, buildingType: String): DataFrame =
     areaBandPivot(df.filter(col("임대건물구분") === buildingType))
 
-  /** G9 — per-complex household-weighted mean rent with all-NULL
-    * groups kept NULL (R:922–940: the `group_split`+`map_df` loop as
-    * ONE hash aggregate) — the pre-impute frame both imputers
-    * ([[weightedRent]] median, [[knnImputeRentsOnComplex]] k-NN)
-    * start from. */
-  def weightedRentRaw(df: DataFrame): DataFrame = {
-    def weighted(c: String) =
-      (sum(when(col(c).isNotNull, col(c) * col("전용면적별세대수")))
-        / sum(when(col(c).isNotNull, col("전용면적별세대수")))).as(c)
-    df.groupBy("단지코드")
-      .agg(weighted("임대보증금"), weighted("임대료"))
+  /** G9 — per-complex household-weighted mean rents, all-NULL groups
+    * kept NULL (R:922–940: the `group_split`+`map_df` loop as ONE
+    * hash aggregate). */
+  private val rentAggs: Seq[Column] = Seq("임대보증금", "임대료").map { c =>
+    (sum(when(col(c).isNotNull, col(c) * col("전용면적별세대수")))
+      / sum(when(col(c).isNotNull, col("전용면적별세대수")))).as(c)
   }
 
-  /** C6 — [[weightedRentRaw]] + exact-median imputation (R:941–943,
-    * the ACTIVE imputation path of the reference). Lazy: the one-row
-    * `percentile` aggregate is broadcast-cross-joined and coalesced
-    * from, so the medians are computed inside whichever job
-    * materializes the table, not by a driver `head()` at plan time. */
-  def weightedRent(df: DataFrame): DataFrame = {
-    val perComplexRent = weightedRentRaw(df)
-    val meds = perComplexRent.agg(
+  /** The weighted rents before imputation: what [[weightedRent]]
+    * imputes by median; [[knnImputeRentsOnComplex]] takes the same
+    * rents from [[complexAggregate]]. */
+  def weightedRentRaw(df: DataFrame): DataFrame = perKey(df, rentAggs)
+
+  /** C6 — exact-median imputation (R:941–943, the ACTIVE imputation
+    * path of the reference) of the weighted rents of a per-complex
+    * frame: a NULL rent takes the median over every row of `perKey`,
+    * the NULL key's included. Lazy: the one-row `percentile`
+    * aggregate is broadcast-cross-joined and coalesced from, so the
+    * medians are computed inside whichever job materializes the
+    * table, not by a driver `head()` at plan time. */
+  private def medianImputed(perKey: DataFrame): DataFrame = {
+    val meds = perKey.agg(
       expr("percentile(`임대보증금`, 0.5)").as("med_deposit"),
       expr("percentile(`임대료`, 0.5)").as("med_rent"))
-    perComplexRent.crossJoin(broadcast(meds))
-      .select(col("단지코드"),
-        coalesce(col("임대보증금"), col("med_deposit")).as("임대보증금"),
-        coalesce(col("임대료"), col("med_rent")).as("임대료"))
+    perKey.crossJoin(broadcast(meds)).select(perKey.columns.toSeq.map {
+      case c @ "임대보증금" => coalesce(col(c), col("med_deposit")).as(c)
+      case c @ "임대료" => coalesce(col(c), col("med_rent")).as(c)
+      case c => col(c)
+    }: _*)
   }
+
+  /** [[weightedRentRaw]] with [[medianImputed]] rents. */
+  def weightedRent(df: DataFrame): DataFrame =
+    medianImputed(weightedRentRaw(df))
+
+  /** Every per-complex column in ONE `groupBy(단지코드)` of `cleaned`:
+    * the complex-level columns of [[perComplex]], then 총면적, the ten
+    * bands and the two weighted rents, in that order, each from the
+    * definition its own table uses. The NULL key is one more row
+    * here; callers that join on the key drop it. */
+  private def complexAggregate(cleaned: DataFrame): DataFrame =
+    perKey(cleaned,
+      firstOf(complexLevelColumns(cleaned, "단지코드").tail) ++
+        (totalAreaAgg +: bandAggs) ++ rentAggs)
 
   /** The COMMENTED-OUT reference imputation (R:820–829
     * `knnImputation`, packages loaded at R:56–60 but never called),
@@ -176,14 +207,15 @@ object ParkingPipeline {
     * fully-priced complexes in (총세대수, 공가수, 단지내주차면수,
     * 총면적) space — the always-present per-complex numerics —
     * through the shared [[graft.ml.KnnImpute]] kernel (broadcast
-    * scored join + TopKPerKey + keyed mean). Returns (단지코드,
-    * imputed 임대보증금); ParkingSpec pins the full output against a
+    * scored join + TopKPerKey + keyed mean). The base frame is the
+    * shared [[complexAggregate]] without the NULL key (the optimizer
+    * prunes the bands away); a selected column that is not
+    * complex-level fails to resolve. Returns (단지코드, imputed
+    * 임대보증금); ParkingSpec pins the full output against a
     * driver-side brute-force recomputation. */
   def knnImputeRentsOnComplex(s: SparkSession, path: String): DataFrame = {
-    val cleaned = clean(loadTrain(s, path))
-    val base = perComplex(cleaned)
-      .join(broadcast(totalArea(cleaned)), Seq("단지코드"))
-      .join(broadcast(weightedRentRaw(cleaned)), Seq("단지코드"))
+    val base = complexAggregate(clean(loadTrain(s, path)))
+      .filter(col("단지코드").isNotNull)
       .select(col("단지코드"), col("총세대수").cast("double").as("총세대수"),
         col("공가수"), col("단지내주차면수"), col("총면적"),
         col("임대보증금"))
@@ -196,42 +228,42 @@ object ParkingPipeline {
 
   /** Entry point A+B (SURVEY §3.1–3.2): the full per-complex feature
     * table — dedup → enrich (area, bands, rents) → impute transit
-    * NAs (C5, R:350–358) → derived ratios (C3, R:421–424). One lazy
-    * DAG apart from the single discovery job of
-    * [[complexLevelColumns]]; every join is a broadcast (one row per
-    * complex on the dimension side). `featureTableOf` takes an
-    * already-cleaned frame so the SAME enrichment runs on train.csv
-    * and (label-less) test.csv — the submission path needs both under
-    * one schema.
+    * NAs (C5, R:350–358) → derived ratios (C3, R:421–424).
+    * `featureTableOf` takes an already-cleaned frame so the SAME
+    * enrichment runs on train.csv and (label-less) test.csv — the
+    * submission path needs both under one schema.
     *
-    * Nothing here caches or materializes: the returned plan re-reads
-    * `cleaned` four times each time it runs. Entry points that run
-    * several actions on the table build it once through
-    * [[withFeatureTable]], which caches `cleaned` only while the table
-    * is built and releases the table before it returns. */
-  def featureTableOf(cleaned: DataFrame): DataFrame = {
-    val dim = perComplex(cleaned)
-    val enriched = dim
-      .join(broadcast(totalArea(cleaned)), Seq("단지코드"))
-      .join(broadcast(areaBandPivot(cleaned)), Seq("단지코드"))
-      .join(broadcast(weightedRent(cleaned)), Seq("단지코드"))
+    * Apart from the discovery job of [[complexLevelColumns]] it is
+    * one lazy plan: the one aggregate of [[complexAggregate]] without
+    * its NULL-key row (the inner joins of the per-table form dropped
+    * it too), and one broadcast cross join with the one-row median
+    * aggregate. The medians are taken before the NULL-key row is
+    * dropped, as [[weightedRent]] takes them. ParkingFixtureSpec keeps
+    * the per-table join form and pins that both give the same rows in
+    * the same order under the same schema.
+    *
+    * Nothing here caches or materializes: the returned plan reads
+    * `cleaned` twice (the table's aggregate and the medians') each
+    * time it runs. Entry points that run several actions on the table
+    * build it once through [[withFeatureTable]], which caches
+    * `cleaned` only while the table is built and releases the table
+    * before it returns. */
+  def featureTableOf(cleaned: DataFrame): DataFrame =
+    medianImputed(complexAggregate(cleaned))
+      .filter(col("단지코드").isNotNull)
       .na.fill(0.0, Seq("지하철역수", "버스정류장수"))
-    enriched
       .withColumn("세대당주차면수", col("단지내주차면수") / col("총세대수"))
       .withColumn("대중교통수", col("지하철역수") + col("버스정류장수"))
-  }
 
-  /** Builds the feature table of `cleaned` once and runs `body` on it.
-    * `body` gets the lazy plan and the table materialized by
-    * [[graft.ops.Rounds.materialize]]; the table has one row per
-    * complex and stays distributed, nothing is collected.
+  /** The lazy feature table of `cleaned` and the same table
+    * materialized by [[graft.ops.Rounds.materialize]]: one row per
+    * complex, distributed, nothing collected. The caller releases the
+    * table.
     *
     * `cleaned` is cached for the discovery job and the table's own
-    * job, and unpersisted once the table exists, unless the caller
-    * had cached it (a cache is shared by every frame with the same
-    * plan, as ParkingSpec's cached `train` is). The table is released
-    * when `body` returns, so `body` must not return a frame that
-    * reads it: return one built on the plan instead.
+    * job, and unpersisted once the table exists (or the build failed),
+    * unless the caller had cached it (a cache is shared by every frame
+    * with the same plan, as ParkingSpec's cached `train` is).
     *
     * Why not `persist()`: the random forest is seeded, but its
     * bagging depends on the partitions and row order of its input. A
@@ -240,17 +272,58 @@ object ParkingPipeline {
     * persisted table changes the predictions. An eager
     * `localCheckpoint` runs the plan as its own adaptive query and
     * keeps the partitioning the un-cached plan has. */
-  private[parking] def withFeatureTable[T](cleaned: DataFrame)(
-      body: (DataFrame, DataFrame) => T): T = {
+  private def materializedFeatureTable(
+      cleaned: DataFrame): (DataFrame, DataFrame) = {
     val owned = cleaned.storageLevel == StorageLevel.NONE
     if (owned) cleaned.cache()
-    val (plan, table) =
-      try {
-        val plan = featureTableOf(cleaned)
-        (plan, Rounds.materialize(plan))
-      } finally if (owned) cleaned.unpersist()
+    try {
+      val plan = featureTableOf(cleaned)
+      (plan, Rounds.materialize(plan))
+    } finally if (owned) cleaned.unpersist()
+  }
+
+  /** Builds the feature table of `cleaned` once, on the calling
+    * thread, and runs `body` on the lazy plan and the materialized
+    * table ([[materializedFeatureTable]]). The table is released when
+    * `body` returns or throws, so `body` must not return a frame that
+    * reads it: return one built on the plan instead. */
+  private[parking] def withFeatureTable[T](cleaned: DataFrame)(
+      body: (DataFrame, DataFrame) => T): T = {
+    val (plan, table) = materializedFeatureTable(cleaned)
     try body(plan, table)
     finally Rounds.release(table)
+  }
+
+  /** Name of the thread [[withFeatureTableBeside]] builds a table on. */
+  private[graft] val TableThreadName = "parking-feature-table"
+
+  /** [[withFeatureTable]] with the table built beside `body`: a thread
+    * that this call creates evaluates `cleaned` and builds its table
+    * while `body` runs on the calling thread. `body` gets a function
+    * that waits for the build and returns (plan, table), or throws
+    * what the build threw.
+    *
+    * The thread is created by the calling thread, so it inherits
+    * Spark's local properties: its jobs run under the caller's job
+    * group. The call joins the thread before it returns or throws,
+    * also when the build or `body` failed, and then releases the
+    * table if it was built: no thread and no table outlives the call.
+    * The thread is a daemon all the same, so that it could not hold
+    * the JVM open. */
+  private def withFeatureTableBeside[T](cleaned: => DataFrame)(
+      body: (() => (DataFrame, DataFrame)) => T): T = {
+    var built: Try[(DataFrame, DataFrame)] = null
+    val thread = new Thread(() =>
+      built = try Success(materializedFeatureTable(cleaned))
+        catch { case e: Throwable => Failure(e) },
+      TableThreadName)
+    thread.setDaemon(true)
+    thread.start()
+    try body { () => thread.join(); built.get }
+    finally {
+      thread.join()
+      built.foreach { case (_, table) => Rounds.release(table) }
+    }
   }
 
   def featureTable(s: SparkSession, path: String): DataFrame =
@@ -371,19 +444,27 @@ object ParkingPipeline {
     * table from label-less test.csv, predict per complex, and write
     * a (code, num) CSV via the S3 sink.
     *
-    * Each feature table is built once ([[withFeatureTable]]): the fit
-    * and the CSV write read the materialized tables, which are
-    * released before return. The returned submission frame (one row
-    * per test complex) is therefore the lazy plan: using it after the
-    * call recomputes the test table from test.csv, with the same
-    * fitted forest, so it holds the rows the CSV holds. */
+    * Each feature table is built once: the fit and the CSV write read
+    * the materialized tables. The test table is built on a thread of
+    * its own ([[withFeatureTableBeside]]), started before the train
+    * table, while the calling thread builds the train table and fits
+    * the forest; the call waits for it before the CSV write. Both
+    * threads' jobs run under the caller's job group. Each table is
+    * released once it is no longer read (the train table after the
+    * fit, the test table after the write), and both are released, and
+    * the table thread joined, when a build or the fit throws.
+    *
+    * The returned submission frame (one row per test complex) is
+    * therefore the lazy plan: using it after the call recomputes the
+    * test table from test.csv, with the same fitted forest, so it
+    * holds the rows the CSV holds. */
   def submission(s: SparkSession, trainPath: String, testPath: String,
       outDir: Option[String] = None): DataFrame = {
     import org.apache.spark.ml.Pipeline
     import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssembler}
     import org.apache.spark.ml.regression.RandomForestRegressor
-    withFeatureTable(clean(loadTrain(s, trainPath))) { (_, train) =>
-      withFeatureTable(clean(loadTest(s, testPath))) { (testPlan, test) =>
+    withFeatureTableBeside(clean(loadTest(s, testPath))) { testTable =>
+      val rf = withFeatureTable(clean(loadTrain(s, trainPath))) { (_, train) =>
         val prep: Array[org.apache.spark.ml.PipelineStage] = Array(
           new StringIndexer().setInputCol("지역").setOutputCol("region_idx")
             .setStringOrderType("alphabetAsc").setHandleInvalid("keep"),
@@ -391,16 +472,17 @@ object ParkingPipeline {
             .setOutputCol("region_oh").setDropLast(true),
           new VectorAssembler().setInputCols(numCols :+ "region_oh")
             .setOutputCol("features").setHandleInvalid("keep"))
-        val rf = new Pipeline().setStages(prep :+
+        new Pipeline().setStages(prep :+
           new RandomForestRegressor().setLabelCol("label")
             .setFeaturesCol("features").setNumTrees(50).setSeed(4))
           .fit(train.withColumnRenamed("등록차량수", "label"))
-        def predict(t: DataFrame) = rf.transform(t)
-          .select(col("단지코드").as("code"), col("prediction").as("num"))
-          .orderBy("code")
-        outDir.foreach(dir => graft.sources.CsvIO.writeCsv(predict(test), dir))
-        predict(testPlan)
       }
+      val (testPlan, test) = testTable()
+      def predict(t: DataFrame) = rf.transform(t)
+        .select(col("단지코드").as("code"), col("prediction").as("num"))
+        .orderBy("code")
+      outDir.foreach(dir => graft.sources.CsvIO.writeCsv(predict(test), dir))
+      predict(testPlan)
     }
   }
 

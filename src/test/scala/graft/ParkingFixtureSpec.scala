@@ -1,12 +1,17 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ml.evaluation.RegressionEvaluator
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.ops.Rounds
 import graft.parking.ParkingPipeline._
 
 /** The paper's pipeline on a committed tiny instance of the
@@ -49,6 +54,108 @@ class ParkingFixtureSpec extends SparkTestBase {
       .head()
     val nKeys = df.select(key).distinct().count()
     key +: others.filter(c => sums.getAs[Long](c) <= nKeys)
+  }
+
+  /** The feature table as it was built before one aggregate held every
+    * per-complex column: one aggregate per table, a two-aggregate
+    * `pivot` for the bands, and three broadcast joins on the key. */
+  private def oldPerComplex(df: DataFrame) =
+    df.select(complexLevelColumns(df, "단지코드").map(col): _*)
+      .dropDuplicates("단지코드")
+
+  private def oldTotalArea(df: DataFrame) = df.groupBy("단지코드")
+    .agg(sum(col("전용면적") * col("전용면적별세대수")).as("총면적"))
+
+  private def oldAreaBandPivot(df: DataFrame) = {
+    val band = least(greatest(bround(col("전용면적"), -1), lit(10.0)),
+      lit(100.0)).cast("int")
+    val pivoted = df.withColumn("band", band)
+      .groupBy("단지코드").pivot("band", bands)
+      .sum("전용면적별세대수")
+      .na.fill(0, bands.map(_.toString))
+    bands.foldLeft(pivoted) { (d, b) =>
+      d.withColumnRenamed(b.toString, f"전용면적_$b%03d")
+    }
+  }
+
+  private def oldWeightedRentRaw(df: DataFrame) = {
+    def weighted(c: String) =
+      (sum(when(col(c).isNotNull, col(c) * col("전용면적별세대수")))
+        / sum(when(col(c).isNotNull, col("전용면적별세대수")))).as(c)
+    df.groupBy("단지코드").agg(weighted("임대보증금"), weighted("임대료"))
+  }
+
+  private def oldWeightedRent(df: DataFrame) = {
+    val raw = oldWeightedRentRaw(df)
+    val meds = raw.agg(
+      expr("percentile(`임대보증금`, 0.5)").as("med_deposit"),
+      expr("percentile(`임대료`, 0.5)").as("med_rent"))
+    raw.crossJoin(broadcast(meds))
+      .select(col("단지코드"),
+        coalesce(col("임대보증금"), col("med_deposit")).as("임대보증금"),
+        coalesce(col("임대료"), col("med_rent")).as("임대료"))
+  }
+
+  private def oldFeatureTableOf(cleaned: DataFrame) =
+    oldPerComplex(cleaned)
+      .join(broadcast(oldTotalArea(cleaned)), Seq("단지코드"))
+      .join(broadcast(oldAreaBandPivot(cleaned)), Seq("단지코드"))
+      .join(broadcast(oldWeightedRent(cleaned)), Seq("단지코드"))
+      .na.fill(0.0, Seq("지하철역수", "버스정류장수"))
+      .withColumn("세대당주차면수", col("단지내주차면수") / col("총세대수"))
+      .withColumn("대중교통수", col("지하철역수") + col("버스정류장수"))
+
+  /** `knnImputeRentsOnComplex` on its three-join base. */
+  private def oldKnnImpute(s: SparkSession, path: String) = {
+    val cleaned = clean(loadTrain(s, path))
+    val base = oldPerComplex(cleaned)
+      .join(broadcast(oldTotalArea(cleaned)), Seq("단지코드"))
+      .join(broadcast(oldWeightedRentRaw(cleaned)), Seq("단지코드"))
+      .select(col("단지코드"), col("총세대수").cast("double").as("총세대수"),
+        col("공가수"), col("단지내주차면수"), col("총면적"),
+        col("임대보증금"))
+    graft.ml.KnnImpute.imputeOf(base, "단지코드",
+      Seq("총세대수", "공가수", "단지내주차면수", "총면적"),
+      "임대보증금", k = 5)
+      .select(col("q_key").as("단지코드"),
+        col("imputed").as("임대보증금_knn"))
+  }
+
+  /** Same column names, order, types and nullability, and the same
+    * rows in the same order. */
+  private def assertSameTable(got: DataFrame, expected: DataFrame) = {
+    assert(got.schema == expected.schema)
+    assert(got.collect().toSeq == expected.collect().toSeq)
+  }
+
+  /** The cleaned fixture train frame, in one partition, with planted
+    * rows: one with a NULL 단지코드 and rents (the NULL key is one
+    * more group for discovery and the medians, and no row of the
+    * table); a NULL 전용면적 in C01002 (a row with no band); in
+    * C01004 a second 공가수 value on its first row, balanced by
+    * C01008's all-NULL 공가수, so 공가수 passes the sum test and
+    * `first` picks C01004's value by row order. C01006 keeps no
+    * priced unit. */
+  private def plantedCleaned = {
+    val base = cleanedTrain
+    val rows = base.collect().toSeq
+    def set(r: Row, updates: (String, Any)*) = {
+      val a = r.toSeq.toArray
+      updates.foreach { case (c, v) => a(base.schema.fieldIndex(c)) = v }
+      Row.fromSeq(a.toSeq)
+    }
+    def firstOf(code: String) =
+      rows.indexWhere(_.getAs[String]("단지코드") == code)
+    val planted = rows.zipWithIndex.map {
+      case (r, i) if i == firstOf("C01002") => set(r, "전용면적" -> null)
+      case (r, i) if i == firstOf("C01004") => set(r, "공가수" -> 99.0)
+      case (r, _) if r.getAs[String]("단지코드") == "C01008" =>
+        set(r, "공가수" -> null)
+      case (r, _) => r
+    } :+ set(rows.head, "단지코드" -> null, "임대보증금" -> 1.0e9,
+      "임대료" -> 1.0e7)
+    spark.createDataFrame(spark.sparkContext.parallelize(planted, 1),
+      base.schema)
   }
 
   /** Job ids started under `group` while `body` ran. A marker job in
@@ -196,6 +303,158 @@ class ParkingFixtureSpec extends SparkTestBase {
         assert(close(got, v), s"$m $metric: $got vs evaluator $v")
       }
     }
+  }
+
+  test("fixture: clean keeps every row, turns the \"\" and \"-\" rent " +
+      "sentinels into NULLs and renames the transit columns") {
+    // counted in the CSV text: train 임대보증금 20 "" + 6 "-" of 71,
+    // 임대료 19 "" + 6 "-"; test 임대보증금 8 "" of 28, 임대료 4 ""
+    val expected = Seq(
+      (cleanedTrain, 71L, Map("임대보증금" -> 26L, "임대료" -> 25L)),
+      (cleanedTest, 28L, Map("임대보증금" -> 8L, "임대료" -> 4L)))
+    expected.foreach { case (df, rows, nulls) =>
+      assert(df.count() == rows)
+      nulls.foreach { case (c, n) =>
+        assert(df.schema(c).dataType == org.apache.spark.sql.types.DoubleType)
+        assert(df.filter(col(c).isNull).count() == n, s"NULL ${c}s")
+      }
+      assert(df.columns.contains("지하철역수") && df.columns.contains("버스정류장수"))
+      assert(!df.columns.exists(_.startsWith("도보 10분거리")))
+    }
+  }
+
+  test("fixture: stratifiedSplit puts each complex on the side " +
+      "pmod(xxhash64(code), 5) < 4 gives") {
+    // xxhash64 (seed 42) of the UTF-8 code, pmod 5, computed with an
+    // independent XXH64: train C01000 0, C01002 4, C01004 2, C01006 0,
+    // C01008 4, C01010 0, C01012 1, C01014 1; test C01001 0, C01003 4,
+    // C01005 4, C01007 2
+    def codes(df: DataFrame) =
+      df.select("단지코드").distinct().collect().map(_.getString(0)).sorted.toSeq
+    val (fitTrain, heldOut) = stratifiedSplit(featureTable(spark, trainCsv))
+    assert(codes(fitTrain) == Seq("C01000", "C01004", "C01006", "C01010",
+      "C01012", "C01014"))
+    assert(codes(heldOut) == Seq("C01002", "C01008"))
+    val (testIn, testOut) = stratifiedSplit(cleanedTest)
+    assert(codes(testIn) == Seq("C01001", "C01007"))
+    assert(codes(testOut) == Seq("C01003", "C01005"))
+  }
+
+  test("feature table: the one aggregate equals the per-table join form " +
+      "on the fixture and on planted NULLs and a first-by-row-order column") {
+    assertSameTable(featureTableOf(cleanedTrain), oldFeatureTableOf(cleanedTrain))
+    assertSameTable(featureTableOf(cleanedTest), oldFeatureTableOf(cleanedTest))
+    val planted = plantedCleaned
+    val table = featureTableOf(planted)
+    assert(table.columns.contains("공가수"))
+    val rows = table.collect()
+    assert(rows.map(_.getAs[String]("단지코드")).sorted.toSeq == trainCodes)
+    assert(rows.find(_.getAs[String]("단지코드") == "C01004").get
+      .getAs[Double]("공가수") == 99.0)
+    assertSameTable(table, oldFeatureTableOf(planted))
+  }
+
+  test("area bands: conditional sums equal the zero-filled pivot") {
+    // the same schema and rows; on its own each is an unordered hash
+    // aggregate (the pivot's second aggregate emits in another order),
+    // so rows are compared by key here, and in table order above
+    Seq(cleanedTrain, plantedCleaned).foreach { df =>
+      val (got, old) = (areaBandPivot(df), oldAreaBandPivot(df))
+      assert(got.schema == old.schema)
+      assert(got.orderBy("단지코드").collect().toSeq ==
+        old.orderBy("단지코드").collect().toSeq)
+    }
+  }
+
+  test("feature table: materializing it starts fewer jobs than the " +
+      "per-table join form") {
+    def build(table: DataFrame) = Rounds.release(Rounds.materialize(table))
+    val (_, oldJobs) = jobsOf("graft-table-old") {
+      build(oldFeatureTableOf(cleanedTrain))
+    }
+    val (_, jobs) = jobsOf("graft-table") { build(featureTableOf(cleanedTrain)) }
+    info(s"jobs to materialize one table: $jobs, the join form $oldJobs")
+    assert(jobs < oldJobs, s"one aggregate $jobs jobs, join form $oldJobs")
+  }
+
+  test("knn imputation: the shared aggregate gives the three-join base's " +
+      "output, and fails the same way on a column that is not complex-level") {
+    assertSameTable(knnImputeRentsOnComplex(spark, trainCsv),
+      oldKnnImpute(spark, trainCsv))
+    // a second 총세대수 in C01000 makes 총세대수 not complex-level
+    val dir = Files.createTempDirectory("graft-parking-knn")
+    try {
+      val bad = dir.resolve("train.csv")
+      val text = new String(Files.readAllBytes(Paths.get(trainCsv)), "UTF-8")
+      assert(text.contains("\nC01000,84,"))
+      Files.write(bad, text.replaceFirst("\nC01000,84,", "\nC01000,85,")
+        .getBytes("UTF-8"))
+      val got = intercept[AnalysisException](
+        knnImputeRentsOnComplex(spark, bad.toString))
+      val old = intercept[AnalysisException](oldKnnImpute(spark, bad.toString))
+      assert(got.getCondition == old.getCondition)
+      assert(got.getCondition.startsWith("UNRESOLVED_COLUMN"))
+    } finally deleteTree(dir)
+  }
+
+  test("submission: every job it starts runs under the caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    val out = Files.createTempDirectory("graft-parking-group")
+    sc.addSparkListener(listener)
+    try {
+      val (_, inGroup) = jobsOf("graft-submission") {
+        submission(spark, trainCsv, testCsv, Some(out.resolve("sub").toString))
+      }
+      // the listener's queue delivers in order: once it has seen the
+      // marker job, it has seen every job of the call
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("graft-submission-marker") &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+      val seen = groups.asScala.toSeq.takeWhile(_ != "graft-submission-marker")
+      assert(inGroup > 0 && seen.count(_ == "graft-submission") == inGroup)
+      assert(seen.count(_ != "graft-submission") == 0,
+        s"jobs outside the caller's group: ${seen.filter(_ != "graft-submission")}")
+    } finally {
+      sc.removeSparkListener(listener)
+      deleteTree(out)
+    }
+  }
+
+  test("submission: a failed build throws and leaves no persisted RDD, " +
+      "cached frame or table thread behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def tableThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName == TableThreadName && t.isAlive)
+    val out = Files.createTempDirectory("graft-parking-fail")
+    try {
+      val missing = out.resolve("missing.csv").toString
+      // the test table's build fails on its own thread, after the train
+      // table was built and the forest fit
+      val noTest = intercept[AnalysisException](
+        submission(spark, trainCsv, missing, Some(out.resolve("a").toString)))
+      assert(noTest.getCondition == "PATH_NOT_FOUND")
+      assert(tableThreads.isEmpty, "the table thread outlived the call")
+      // the train table's build fails while the test table is built
+      val noTrain = intercept[AnalysisException](
+        submission(spark, missing, testCsv, Some(out.resolve("b").toString)))
+      assert(noTrain.getCondition == "PATH_NOT_FOUND")
+      assert(tableThreads.isEmpty, "the table thread outlived the call")
+      assert(!Files.exists(out.resolve("a")) && !Files.exists(out.resolve("b")))
+    } finally deleteTree(out)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+    assert(cleanedTrain.storageLevel == StorageLevel.NONE,
+      "the cleaned train frame is still cached")
+    assert(cleanedTest.storageLevel == StorageLevel.NONE,
+      "the cleaned test frame is still cached")
   }
 
   private def deleteTree(p: Path): Unit = {
