@@ -110,9 +110,13 @@ object Dedup {
     * (metadata scale — near-dup pairs, not the corpus). Eager
     * `localCheckpoint` pins the pair source (so d2b runs ONCE) and
     * each round's edges (so lineage doesn't grow with iterations —
-    * an unbounded iterative plan is its own scale-killer). Isolated
-    * docs (the overwhelming majority of a real corpus) never enter
-    * the loop and rejoin at the end with rep = doc_id.
+    * an unbounded iterative plan is its own scale-killer). An edge
+    * set at or under [[localFinishCap]] (derived from the session's
+    * broadcast threshold) skips the rounds: one bounded collect
+    * brings it to the driver, union-find labels it, and the labels
+    * come back as a local frame the consumer's join broadcasts.
+    * Isolated docs (the overwhelming majority of a real corpus) never
+    * enter either path and rejoin at the end with rep = doc_id.
     * Oracle: DuckDB recursive-CTE reachability closure + min. */
   /** Session cache of the DEFAULT (d2b-sourced) cluster labels, keyed
     * like the pipeline's kept-list cache: d6's labels are consumed by
@@ -138,45 +142,75 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep"))
   }
 
-  /** Large-star/small-star connected components over an undirected
-    * (doc_a, doc_b) pair set → (doc_id, rep = component min) for
-    * every CONNECTED vertex, plus the round count (exposed so the
-    * convergence-speed contract is testable).
+  /** Connected components over an undirected (doc_a, doc_b) pair set
+    * → (doc_id, rep = component min) for every CONNECTED vertex, plus
+    * the number of large-star/small-star rounds run (exposed so the
+    * convergence-speed contract is testable; 0 on the local finish).
     *
-    * Invariant (paper §3): both operations connect nodes only to
-    * smaller nodes in the same component, and the component minimum
-    * only ever acquires edges — so the fixpoint is a disjoint union
-    * of stars centered on each component's min, and `rep` equals the
-    * recursive-closure min the oracle computes. Edges are kept
-    * directed high→low between rounds; large-star reads the
+    * The edge set is materialized once, then ONE job collects at most
+    * `cap + 1` of its edges, `cap` = [[localFinishCap]]. At or under
+    * the cap the graph is finished on the driver by union-find and
+    * the labels return as a local frame with the rounds path's exact
+    * schema — small enough by construction that a consumer's join
+    * broadcasts it. Driver memory is bounded by the cap, never by
+    * the input. Above it the distributed rounds below run.
+    *
+    * Rounds invariant (paper §3): both operations connect nodes only
+    * to smaller nodes in the same component, and the component
+    * minimum only ever acquires edges — so the fixpoint is a disjoint
+    * union of stars centered on each component's min, and `rep`
+    * equals the recursive-closure min the oracle computes. Edges are
+    * kept directed high→low between rounds; large-star reads the
     * symmetric view (one union, no extra shuffle beyond its agg).
     * Convergence = the directed edge set reaches a fixpoint (equal
     * cardinality + empty one-way except over two distinct sets). */
   private[graft] def alternatingStarLabels(
       pairs: DataFrame): (DataFrame, Int) = {
-    var edges = graft.ops.Rounds.materialize(pairs
-      .select(greatest(col("doc_a"), col("doc_b")).as("u"),
-        least(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct())
-    var converged = edges.isEmpty
+    val s = pairs.sparkSession
+    val edges = graft.ops.Rounds.materialize(edgeSet(pairs))
+    val cap = localFinishCap(s)
+    // coalesce(1): the bounded take scans one partition, so it is one
+    // job however the edge set is partitioned
+    val head = edges.coalesce(1).limit(cap + 1).collect()
+    if (head.length > cap) starRounds(edges)
+    else {
+      // the schema a round's labels carry (analysis only, no job)
+      val schema = starLabels(starRound(edges)).schema
+      val labels = localStarLabels(s, head, schema)
+      graft.ops.Rounds.release(edges)
+      (labels, 0)
+    }
+  }
+
+  /** One large-star/small-star round over a directed edge set, as a
+    * lazy plan. */
+  private def starRound(edges: DataFrame): DataFrame = {
+    // LARGE-STAR: for every node, link each strictly-LARGER
+    // neighbor to min(Γ(u) ∪ {u}) — long paths fold in half
+    val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+    val lsMin = sym.groupBy("u").agg(min("v").as("mn"))
+    val ls = sym.join(lsMin, "u")
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), least(col("mn"), col("u")).as("v"))
+      .distinct()
+    // SMALL-STAR: for every node, link its smaller-or-self
+    // neighborhood (incl. itself) to that neighborhood's min
+    val ssMin = ls.groupBy("u").agg(min("v").as("mn"))
+    ls.join(ssMin, "u")
+      .select(col("v").as("u"), col("mn").as("v"))
+      .union(ssMin.select(col("u"), col("mn").as("v")))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+  }
+
+  /** The rounds path of [[alternatingStarLabels]], from its
+    * materialized non-empty edge set. */
+  private def starRounds(first: DataFrame): (DataFrame, Int) = {
+    var edges = first
+    var converged = false
     var rounds = 0
     while (!converged && rounds < 50) {
-      // LARGE-STAR: for every node, link each strictly-LARGER
-      // neighbor to min(Γ(u) ∪ {u}) — long paths fold in half
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = sym.groupBy("u").agg(min("v").as("mn"))
-      val ls = sym.join(lsMin, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), least(col("mn"), col("u")).as("v"))
-        .distinct()
-      // SMALL-STAR: for every node, link its smaller-or-self
-      // neighborhood (incl. itself) to that neighborhood's min
-      val ssMin = ls.groupBy("u").agg(min("v").as("mn"))
-      val ss = graft.ops.Rounds.materialize(ls.join(ssMin, "u")
-        .select(col("v").as("u"), col("mn").as("v"))
-        .union(ssMin.select(col("u"), col("mn").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct())
+      val ss = graft.ops.Rounds.materialize(starRound(edges))
       // fixpoint test in ONE job (round 14 — was count + exceptAll,
       // two jobs; the loop's wall cost at bench scale is job-count ×
       // scheduler latency, not data): ss and edges are both DISTINCT
@@ -196,11 +230,66 @@ object Dedup {
     }
     if (!converged) throw new IllegalStateException(
       s"d6 star contraction did not converge in $rounds rounds")
-    val labels = edges
+    (starLabels(edges), rounds)
+  }
+
+  /** The canonical edge set of a pair source: undirected pairs
+    * directed high→low, self-loops dropped, duplicates merged. */
+  private[graft] def edgeSet(pairs: DataFrame): DataFrame =
+    pairs
+      .select(greatest(col("doc_a"), col("doc_b")).as("u"),
+        least(col("doc_a"), col("doc_b")).as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+
+  /** (doc_id, rep) of a converged star edge set: each leaf's center
+    * and each center itself. */
+  private def starLabels(edges: DataFrame): DataFrame =
+    edges
       .select(col("u").as("doc_id"), col("v").as("rep"))
       .union(edges.select(col("v").as("doc_id"), col("v").as("rep")))
       .groupBy("doc_id").agg(min("rep").as("rep"))
-    (labels, rounds)
+
+  /** Bytes Spark's size estimate charges one local label row: the
+    * 8-byte row header plus two 8-byte longs. */
+  private val LabelRowBytes = 24L
+
+  /** Largest edge set [[alternatingStarLabels]] finishes on the
+    * driver, derived from `spark.sql.autoBroadcastJoinThreshold`, not
+    * set on its own: E edges touch at most 2E vertices, so a graph of
+    * threshold / (2 × 24) edges yields a label frame that Spark's
+    * estimate still places under the threshold — its consumers'
+    * joins broadcast it, and the driver never holds more than that
+    * many edges (about 218k at the 10 MB default). A disabled
+    * broadcast (threshold ≤ 0) gives cap 0: every non-empty graph
+    * takes the rounds. */
+  private[graft] def localFinishCap(s: SparkSession): Int = {
+    val threshold = s.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold <= 0) 0
+    else math.min(threshold / (2 * LabelRowBytes), Int.MaxValue - 1L).toInt
+  }
+
+  /** Component minimum of every vertex of `edges` (u, v rows), by
+    * union-find on the driver, as a local frame of `schema`. Roots
+    * are always their component's minimum: a union hangs the larger
+    * root under the smaller. */
+  private def localStarLabels(s: SparkSession,
+      edges: Array[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    edges.foreach { e =>
+      val (ra, rb) = (find(e.getLong(0)), find(e.getLong(1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val rows = parent.keys.toSeq.sorted
+      .map(v => org.apache.spark.sql.Row(v, find(v)))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Pre-coalesce exchange width for compute-dense stages — see

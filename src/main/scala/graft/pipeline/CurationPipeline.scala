@@ -33,8 +33,12 @@ import graft.text.{BpeMerges, SequencePacking, TextAnalysis}
   *    near-dup pair graph and the final keep-join consume it — and
   *    the quadratic-in-candidates d2b stage thereby sees the SMALLEST
   *    possible corpus, after all cheap gates;
-  *  - the keep-list itself is d6's star contraction (edge-scale
-  *    joins, per-round checkpoints);
+  *  - the keep-list itself is d6's star contraction: a near-dup
+  *    graph at or under the cap derived from the broadcast threshold
+  *    (`Dedup.localFinishCap`) is finished on the driver in one
+  *    bounded collect and its labels broadcast into the keep-join;
+  *    a larger one runs the edge-scale rounds with per-round
+  *    checkpoints;
   *  - shard assignment is a scan-level key-mix projection; packing
   *    pays the pipeline's one remaining keyed exchange (co-locate by
   *    shard), identical to what the shard WRITER needs anyway.
@@ -151,7 +155,7 @@ object CurationPipeline {
     keptCache.computeIfAbsent((s.sparkContext.applicationId, dir),
       _ => graft.SessionCaches.pin(keptPlan(s, dir)))
 
-  private def keptPlan(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def keptPlan(s: SparkSession, dir: String): DataFrame = {
     val survived = survivedDocs(s, dir)
     val pairs = Dedup.d2PairsOf(
       survived.select("doc_id", "text"), Dedup.StopShingleCap)
@@ -169,7 +173,14 @@ object CurationPipeline {
     * count, packed-sequence count (x8 next-fit at a 512-token
     * budget), whitespace-token mass, and an order-insensitive md5
     * digest of the kept doc_ids (sorted-numeric, space-joined — the
-    * x4/d1 canonicalization applied to the membership set). */
+    * x4/d1 canonicalization applied to the membership set).
+    *
+    * The sequence count needs no distinct aggregate: next-fit uses
+    * bin 0 exactly when a shard has a non-oversize doc and every bin
+    * 1..max after it, so it is [[SequencePacking.binCount]] — plain
+    * maxes beside `collect_list`, not Spark's single-distinct plan.
+    * The oracle keeps `count(DISTINCT …)`, so the hash checks the
+    * identity. */
   def x25PipelineE2e(s: SparkSession, dir: String): DataFrame = {
     val kept = keptDocs(s, dir)
     val packed = SequencePacking.packByGroup(
@@ -178,7 +189,7 @@ object CurationPipeline {
     packed
       .groupBy(shiftright(col("seq_id"), 32).as("shard"))
       .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("seq_id")).as("n_sequences"),
+        SequencePacking.binCount.as("n_sequences"),
         sum(col("n_tokens")).cast("bigint").as("sum_tokens"),
         md5(array_join(transform(array_sort(collect_list(col("doc_id"))),
           _.cast("string")), " ").cast("binary")).as("docs_hash"))

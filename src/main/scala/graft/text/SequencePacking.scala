@@ -117,6 +117,18 @@ object SequencePacking {
       }.toDF("doc_id", "n_tokens", "seq_id", "oversize")
   }
 
+  /** Distinct packed sequences of one [[packByGroup]] group, as an
+    * aggregate over its rows: next-fit puts the first non-oversize
+    * doc in bin 0 and opens bins 1, 2, … one at a time, each for the
+    * doc that needed it, so the used bins are 0 (iff a non-oversize
+    * doc exists) and 1..max(bin) — `max(bin) + max(if(oversize, 0,
+    * 1))`, bin being the low 32 bits of `seq_id`. Equals
+    * `countDistinct(seq_id)` per group (PackingSpec), without the
+    * distinct aggregate's extra shuffle; non-null like the count. */
+  val binCount: org.apache.spark.sql.Column = coalesce(
+    max(col("seq_id").bitwiseAND(0xFFFFFFFFL))
+      + max(when(col("oversize"), 0L).otherwise(1L)), lit(0L))
+
   /** The queries() surface: pack the documents table at a 512-token
     * budget using the whitespace token count (x1's `token_count`
     * native expression), with the deterministic mod-`numGroups`

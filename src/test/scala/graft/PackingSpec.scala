@@ -92,6 +92,36 @@ class PackingSpec extends SparkTestBase {
     assert(packed.count() == 400)
   }
 
+  test("packByGroup: max(bin) + max(if(oversize, 0, 1)) counts each " +
+      "group's distinct sequences (x25's n_sequences)") {
+    // group 0: oversize docs only; group 1: mixed, an oversize doc
+    // first and between fitting ones; group 2: no oversize doc;
+    // group 3: one fitting doc (bin 0 alone)
+    val docs = Seq(
+      (10L, 900L, 0L), (11L, 700L, 0L), (12L, 600L, 0L),
+      (20L, 800L, 1L), (21L, 200L, 1L), (22L, 200L, 1L), (23L, 999L, 1L),
+      (24L, 200L, 1L), (25L, 100L, 1L), (26L, 300L, 1L),
+      (30L, 250L, 2L), (31L, 250L, 2L), (32L, 250L, 2L), (33L, 10L, 2L),
+      (40L, 5L, 3L)).toDF("doc_id", "n_tokens", "g")
+    val packed = SequencePacking.packByGroup(docs, maxTokens = 500,
+      numParts = 2, grp = col("g"))
+    val got = packed.groupBy(shiftright(col("seq_id"), 32).as("g"))
+      .agg(SequencePacking.binCount.as("bins"),
+        countDistinct(col("seq_id")).as("distinct"),
+        max(col("oversize").cast("int")).as("any_os"),
+        min(col("oversize").cast("int")).as("all_os"))
+      .orderBy("g").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
+        r.getInt(4))).toSeq
+    assert(got.map(r => (r._1, r._2)) == got.map(r => (r._1, r._3)))
+    assert(got.map(r => (r._1, r._3)) == Seq(0L -> 3L, 1L -> 5L, 2L -> 2L,
+      3L -> 1L))
+    // the three shapes the identity must hold on are all present
+    assert(got.map(r => (r._4, r._5)) == Seq((1, 1), (1, 0), (0, 0), (0, 0)))
+    val f = packed.agg(SequencePacking.binCount.as("n")).schema("n")
+    assert(f.dataType == org.apache.spark.sql.types.LongType && !f.nullable)
+  }
+
   test("x44: boundary spans tile every sequence gaplessly") {
     val b = SequencePacking
       .x44PackingBoundaries(spark, sfSmoke).cache()

@@ -158,24 +158,6 @@ class ParkingFixtureSpec extends SparkTestBase {
       base.schema)
   }
 
-  /** Job ids started under `group` while `body` ran. A marker job in
-    * its own group runs after `body`: the listener bus delivers events
-    * in order, so once the marker is visible every job of `body` is. */
-  private def jobsOf[T](group: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    val out = try body finally sc.clearJobGroup()
-    val marker = s"$group-marker"
-    sc.setJobGroup(marker, marker)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30000000000L
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
-      System.nanoTime() < deadline) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty,
-      "the marker job never reached the status tracker")
-    (out, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
-
   test("fixture: discovery finds the hand-derived complex-level columns") {
     // 임대건물구분 is constant in 7 complexes but C01006 has two
     // building types: 7 + 2 = 9 > 8 complexes, so it is not

@@ -287,23 +287,24 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
-  test("star contraction equals union-find on random adversarial graphs") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    // driver-side union-find reference (path compression)
-    def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      parent.keys.map(k => k -> find(k)).toMap
+  // driver-side union-find reference (path compression)
+  private def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
-    for (trial <- 1 to 5) {
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  /** Five adversarial edge lists (self-loops dropped), seeded. */
+  private def starShapes(): Seq[(Int, Seq[(Long, Long)])] = {
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 5) yield {
       val n = 40 + rnd.nextInt(40)
       val shape = trial % 3 match {
         case 0 => // sparse random
@@ -316,7 +317,13 @@ class PropertySpec extends SparkTestBase {
           (0 until 3).flatMap(c => Seq.fill(n / 3)(
             ((c * 1000).toLong, (c * 1000 + 1 + rnd.nextInt(n)).toLong)))
       }
-      val edges = shape.filter(e => e._1 != e._2)
+      trial -> shape.filter(e => e._1 != e._2)
+    }
+  }
+
+  test("star contraction equals union-find on random adversarial graphs") {
+    import spark.implicits._
+    for ((trial, edges) <- starShapes()) {
       if (edges.nonEmpty) {
         val (labels, rounds) = Dedup.alternatingStarLabels(
           edges.toDF("doc_a", "doc_b"))
@@ -330,6 +337,21 @@ class PropertySpec extends SparkTestBase {
         assert(rounds <= bound,
           s"trial $trial: $rounds rounds exceeds the O(log n) bound $bound")
       }
+    }
+  }
+
+  test("star contraction: the local finish and the rounds path both " +
+      "equal union-find on the adversarial graphs") {
+    import spark.implicits._
+    for ((trial, edges) <- starShapes() if edges.nonEmpty) {
+      val pairs = edges.toDF("doc_a", "doc_b")
+      val want = components(edges)
+      val (local, r0) = Dedup.alternatingStarLabels(pairs)
+      val (rounds, r1) = withStarCap(0)(Dedup.alternatingStarLabels(pairs))
+      assert(r0 == 0 && r1 > 0, s"trial $trial: paths $r0 / $r1 rounds")
+      for ((path, labels) <- Seq("local" -> local, "rounds" -> rounds))
+        assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1))
+          .toMap == want, s"trial $trial: $path labels diverge")
     }
   }
 

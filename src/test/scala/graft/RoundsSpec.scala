@@ -58,6 +58,26 @@ class RoundsSpec extends SparkTestBase {
       s"release left blocks resident: ${created.intersect(after)}")
   }
 
+  test("d6 star contraction on the rounds path: reliable checkpointing " +
+      "is value-identical and writes a file per round") {
+    withStarCap(0) {
+      val local = rows(dedup.Dedup.d6ClustersOf(spark, sfTest,
+        dedup.Dedup.d2bDedupNgramCapped))
+      withReliable { dir =>
+        val reliable = rows(dedup.Dedup.d6ClustersOf(spark, sfTest,
+          dedup.Dedup.d2bDedupNgramCapped))
+        assert(reliable == local)
+        // the edge set plus at least one round, each its own rdd-*
+        val walk = Files.walk(dir)
+        val written =
+          try walk.filter(p => p.getFileName.toString.startsWith("rdd-"))
+            .count()
+          finally walk.close()
+        assert(written >= 2, s"$written checkpoints: no round was written")
+      }
+    }
+  }
+
   test("d6 star contraction: reliable checkpointing is value-identical") {
     val local = rows(dedup.Dedup.d6ClustersOf(spark, sfSmoke,
       dedup.Dedup.d2bDedupNgramCapped))
