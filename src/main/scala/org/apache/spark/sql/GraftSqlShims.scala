@@ -46,4 +46,12 @@ object GraftSqlShims {
     * catalyst `SortOrder` here, not after analysis). */
   def expression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
+
+  /** A new session on `spark`'s SparkContext that starts as a copy of
+    * its state: every SQL setting, temp view, registered function and
+    * `QueryExecutionListener` (`cloneSession` is `private[sql]`;
+    * `newSession()` copies none of these). Later changes to either
+    * session do not reach the other. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[ClassicSparkSession].cloneSession()
 }

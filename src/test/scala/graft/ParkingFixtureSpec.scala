@@ -6,9 +6,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ml.evaluation.RegressionEvaluator
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlanInfo}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Rounds
@@ -26,13 +31,17 @@ import graft.parking.ParkingPipeline._
   * the CSV text by hand (exact fractions), not by the pipeline.
   * `submission.csv` is the CSV `submission` wrote for this fixture
   * while it still built each feature table lazily, once per Spark
-  * action; materializing each table once must not move a byte of it. */
+  * action; materializing each table once must not move a byte of it,
+  * and neither must running it interpreted (the fixture is under
+  * `InterpretedInputBytes`) or compiled (the cut-off forced below
+  * it). */
 class ParkingFixtureSpec extends SparkTestBase {
 
   private val fixture = Paths.get(
     getClass.getResource("/parking/train.csv").toURI).getParent
   private val trainCsv = fixture.resolve("train.csv").toString
   private val testCsv = fixture.resolve("test.csv").toString
+  private val ageGenderCsv = fixture.resolve("age_gender_info.csv").toString
 
   private val trainCodes = (0 to 14 by 2).map(i => f"C${1000 + i}%05d")
   private val testCodes = (1 to 7 by 2).map(i => f"C${1000 + i}%05d")
@@ -195,14 +204,216 @@ class ParkingFixtureSpec extends SparkTestBase {
         Some(out.resolve("sub").toString))
       assert(sub.columns.toSeq == Seq("code", "num"))
       assert(sub.collect().map(_.getString(0)).toSeq == testCodes)
-      val parts = Files.list(out.resolve("sub")).toArray.map(_.asInstanceOf[Path])
-        .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
-      val written = parts.map(p => new String(Files.readAllBytes(p), "UTF-8"))
-        .mkString
-      val golden = new String(
-        Files.readAllBytes(fixture.resolve("submission.csv")), "UTF-8")
-      assert(written == golden)
+      assert(written(out.resolve("sub")) == golden)
     } finally deleteTree(out)
+  }
+
+  /** The CSV text a write left in `dir`, its part files in name order. */
+  private def written(dir: Path): String =
+    Files.list(dir).toArray.map(_.asInstanceOf[Path])
+      .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
+      .map(p => new String(Files.readAllBytes(p), "UTF-8")).mkString
+
+  private def golden: String =
+    new String(Files.readAllBytes(fixture.resolve("submission.csv")), "UTF-8")
+
+  /** `body`'s result and the plan of every SQL execution it started
+    * under job group `group`: each execution's first plan and every
+    * adaptive re-plan of it, whichever session ran it (a listener on
+    * the SparkContext sees every session's executions). */
+  private def plansOf[T](group: String)(body: => T): (T, Seq[SparkPlanInfo]) = {
+    val sc = spark.sparkContext
+    val marker = s"$group-marker"
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val plans = new ConcurrentLinkedQueue[(Long, SparkPlanInfo)]
+    @volatile var sawMarker = false
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          ids.add(s.executionId)
+          plans.add(s.executionId -> s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add(u.executionId -> u.sparkPlanInfo)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+          _.getProperty("spark.jobGroup.id") == marker)) sawMarker = true
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      // the listener's queue delivers in order: once it has seen the
+      // marker job, it has seen every event of `body`
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!sawMarker && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sawMarker, "the listener never saw the marker job")
+      (out, plans.asScala.toSeq.collect { case (id, p) if ids.contains(id) => p })
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def nodeNames(p: SparkPlanInfo): Seq[String] =
+    p.nodeName +: p.children.flatMap(nodeNames)
+
+  private val FactoryMode = "spark.sql.codegen.factoryMode"
+
+  /** Runs `run` (given an output directory) on the fixture, checks the
+    * CSV it wrote against the golden, and returns its frame and the
+    * names of every plan node it executed. */
+  private def submissionNodes(group: String)(
+      run: String => DataFrame): (DataFrame, Seq[String]) = {
+    val out = Files.createTempDirectory("graft-parking-paths")
+    try {
+      val (sub, plans) = plansOf(group)(run(out.resolve("sub").toString))
+      assert(plans.nonEmpty, "no SQL execution was seen")
+      assert(written(out.resolve("sub")) == golden)
+      (sub, plans.flatMap(nodeNames))
+    } finally deleteTree(out)
+  }
+
+  /** `body`'s result and the successful executions a
+    * `QueryExecutionListener` registered on the test session hears of
+    * while `body` runs, counted by session: the test session's, any
+    * other's. Listeners hear of executions in order but later, so the
+    * counts are read once a marker query run after `body` is heard of. */
+  private def listened[T](body: => T): (T, Int, Int) = {
+    val own = new java.util.concurrent.atomic.AtomicInteger
+    val other = new java.util.concurrent.atomic.AtomicInteger
+    val marker = "graft-listened-marker"
+    @volatile var sawMarker = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.sparkSession ne spark) other.incrementAndGet()
+        else if (qe.analyzed.toString.contains(marker)) sawMarker = true
+        else own.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      spark.sql(s"SELECT '$marker'").collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!sawMarker && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sawMarker, "the listener never saw the marker query")
+      (out, own.get, other.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("paths: on the fixture submission runs in an interpreted copy of " +
+      "the session (no whole-stage codegen), writes the golden CSV, is " +
+      "seen by the caller's listeners, and leaves the caller's session " +
+      "as it was; the frame it returns belongs to the copy") {
+    val fixtureBytes = Seq(trainCsv, testCsv).map(p => Files.size(Paths.get(p))).sum
+    assert(fixtureBytes <= InterpretedInputBytes)
+    val ((sub, nodes), own, other) = listened {
+      submissionNodes("graft-interpreted")(out =>
+        submission(spark, trainCsv, testCsv, Some(out)))
+    }
+    assert(!nodes.exists(_.startsWith("WholeStageCodegen")),
+      s"compiled stages on the small input: ${nodes.distinct}")
+    assert(own == 0 && other > 0,
+      s"the caller's listener saw $own own and $other copied executions")
+    assert(!spark.sessionState.conf.contains(FactoryMode))
+    // the returned frame is in the copy: a listener registered on the
+    // caller's session after the call does not hear of it, and its temp
+    // views land in the copy's catalog
+    assert(sub.sparkSession ne spark)
+    assert(sub.sparkSession.conf.get(FactoryMode) == "NO_CODEGEN")
+    val (codes, _, seen) = listened(sub.collect().map(_.getString(0)).toSeq)
+    assert(codes == testCodes)
+    assert(seen == 0)
+    sub.createOrReplaceTempView("graft_probe_submission")
+    assert(!spark.catalog.tableExists("graft_probe_submission"))
+    assert(sub.sparkSession.catalog.tableExists("graft_probe_submission"))
+  }
+
+  test("paths: above the cut-off submission runs in the caller's session " +
+      "and its compiled plans, and the CSV is again the golden") {
+    val ((sub, nodes), own, other) = listened {
+      submissionNodes("graft-compiled")(out =>
+        submissionWithin(-1L)(spark, trainCsv, testCsv, Some(out)))
+    }
+    assert(nodes.exists(_.startsWith("WholeStageCodegen")),
+      s"no compiled stage above the cut-off: ${nodes.distinct}")
+    assert(own > 0 && other == 0)
+    assert(sub.sparkSession eq spark)
+    assert(!spark.sessionState.conf.contains(FactoryMode))
+  }
+
+  test("paths: the cut-off sums the files, a directory's files included, " +
+      "and a path that cannot be listed keeps the compiled path") {
+    def size(p: Path) = Files.size(p)
+    val both = size(Paths.get(trainCsv)) + size(Paths.get(testCsv))
+    assert(totalAtMost(spark, Seq(trainCsv, testCsv), both))
+    assert(!totalAtMost(spark, Seq(trainCsv, testCsv), both - 1))
+    val dir = Files.list(fixture).toArray.map(_.asInstanceOf[Path])
+      .filter(Files.isRegularFile(_)).map(size).sum
+    assert(totalAtMost(spark, Seq(fixture.toString), dir))
+    assert(!totalAtMost(spark, Seq(fixture.toString), dir - 1))
+    assert(!totalAtMost(spark,
+      Seq(fixture.resolve("missing.csv").toString), Long.MaxValue))
+  }
+
+  test("paths: the interpreted copy starts with the caller's settings " +
+      "(custom keys included), temp views, functions and listeners, and " +
+      "changes none of them") {
+    val dir = Files.createTempDirectory("graft-parking-ckpt").toString
+    val partitions = "spark.sql.shuffle.partitions"
+    val prevPartitions = spark.conf.get(partitions)
+    spark.conf.set(Rounds.CheckpointDirKey, dir)
+    spark.conf.set(partitions, "3")
+    spark.udf.register("graft_probe_plus1", (x: Long) => x + 1)
+    // the loaders read in the caller's session: its catalog holds this
+    loadTrain(spark, trainCsv).createOrReplaceTempView("graft_probe_train")
+    try {
+      val rows = spark.sql("SELECT count(*) FROM graft_probe_train").head.getLong(0)
+      val ((child, plus1), _, other) = listened {
+        val child = interpreted(spark)
+        (child, child.sql("SELECT graft_probe_plus1(count(*)) " +
+          "FROM graft_probe_train").head.getLong(0))
+      }
+      assert(plus1 == rows + 1)
+      assert(other == 1)
+      assert(child ne spark)
+      assert(child.conf.get(Rounds.CheckpointDirKey) == dir)
+      assert(child.conf.get(partitions) == "3")
+      assert(child.conf.get(FactoryMode) == "NO_CODEGEN")
+      assert(!spark.sessionState.conf.contains(FactoryMode))
+      assert(spark.conf.get(partitions) == "3")
+    } finally {
+      spark.catalog.dropTempView("graft_probe_train")
+      spark.sql("DROP TEMPORARY FUNCTION IF EXISTS graft_probe_plus1")
+      spark.conf.unset(Rounds.CheckpointDirKey)
+      spark.conf.set(partitions, prevPartitions)
+      deleteTree(Paths.get(dir))
+    }
+  }
+
+  test("demographics: each complex of the feature table gets its " +
+      "region's 22 shares of age_gender_info.csv") {
+    val lines = Files.readAllLines(Paths.get(ageGenderCsv)).asScala.toSeq
+    val shareCols = lines.head.split(",").toSeq.tail
+    val shares = lines.tail.map { l =>
+      val a = l.split(",")
+      a.head -> a.tail.map(_.toDouble).toSeq
+    }.toMap
+    assert(shareCols.size == 22 && shares.size == 16)
+    val features = featureTable(spark, trainCsv)
+    val ageGender = loadAgeGender(spark, ageGenderCsv)
+    val joined = withDemographics(features, ageGender)
+    assert(joined.columns.toSet == (features.columns ++ shareCols).toSet)
+    val rows = joined.collect()
+    assert(rows.map(_.getAs[String]("단지코드")).sorted.toSeq == trainCodes)
+    rows.foreach { r =>
+      val region = r.getAs[String]("지역")
+      assert(shares.contains(region), s"$region is not in the CSV")
+      assert(shareCols.map(c => r.getAs[Double](c)) == shares(region),
+        s"shares of ${r.getAs[String]("단지코드")} ($region)")
+    }
   }
 
   test("fixture: submission and fitAndScore leave no cached data and no " +
