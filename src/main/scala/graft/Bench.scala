@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark: run every declarative `SparkEntry` query at
   * the given scale factor and emit one JSON line of per-query wall
@@ -251,16 +250,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = GraftExtensions.cores
+    val spark = GraftExtensions.session(cpus,
       // the ContextCleaner's driver-GC default is 30 min — longer
       // than the whole bench, so weak-ref'd broadcast/shuffle state
       // would never be reclaimed mid-run without this
-      .config("spark.cleaner.periodicGC.interval", "1min")
+      "spark.cleaner.periodicGC.interval" -> "1min",
       // Let AQE size every exchange from the data instead of pinning
       // all shuffles at cpu count: stages start wide and coalesce
       // down to the advisory size, so a 35 GB sort (d2b's sf10
@@ -277,8 +272,8 @@ object Bench {
       // queries (measured ~30% on the dedup subset, d4 4.5 vs 2.0 s
       // cold — it was the r13 "degraded window" that no ambient-load
       // reading could explain).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_INITIAL", cpus))
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        sys.env.getOrElse("SPARK_GRAFT_AQE_INITIAL", cpus.toString),
       // ObjectHashAggregate (collect_list/typed Aggregators) falls
       // back to SORT-based aggregation after 128 distinct keys per
       // partition — a default that turns d2b's per-shingle doc-list
@@ -292,12 +287,8 @@ object Bench {
       // stream through a cheap small sort — measured 8–11× on
       // x9/x9b against the r12 record while the surface median sat
       // at ambient 1.45×. Ladder protocol sets 4194304 for sf3+.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
         sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_KEYS", "128"))
-      // events.parquet carries TIMESTAMP(NANOS) — see Tables.load
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
     // Warmup: touch the fact table once so session/codegen/parquet

@@ -30,9 +30,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Aggregates.g1AggSum(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Aggregates.queries ++ Joins.queries ++
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * first calls [[GraftExtensions.install]] on the session it is
+    * given, so it also runs on a session built without graft's
+    * extensions. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    (Relational.queries ++ Aggregates.queries ++ Joins.queries ++
       TemporalJoins.queries ++
       Reshape.queries ++ Ordering.queries ++ TextAnalysis.queries ++
       Dedup.queries ++ Similarity.queries ++ EventStreams.queries ++
@@ -47,7 +50,12 @@ object SparkEntry {
       HybridRetrieval.queries ++ KnnImpute.queries ++ MmrRerank.queries ++
       MiceImpute.queries ++ CsvIO.queries ++ PlotSink.queries ++
       EncodingSniff.queries ++ UnigramTokenizer.queries ++
-      KmvSketch.queries
+      KmvSketch.queries).map { case (name, f) =>
+        name -> { (s: SparkSession, dir: String) =>
+          GraftExtensions.install(s)
+          f(s, dir)
+        }
+      }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -368,7 +368,7 @@ object Dedup {
     // AQE's byte-based coalescing is structurally wrong for it: at
     // gate SF it squeezed d8's 17 MB exchange to 4 tasks carrying
     // ~15 s of summed pair-emission CPU while 28 cores idled (the
-    // r13 verdict's d8 anti-scaling signal; ScaleProbe stage table).
+    // r13 verdict's d8 anti-scaling signal; OPTIMIZATION_r14.md).
     // Pinning the exchange at the session's configured initial width
     // disables the coalesce without changing sf10 behavior (there
     // the 35 GB frame never coalesced anyway: 256 × 137 MB).
@@ -926,7 +926,6 @@ object Dedup {
     * clustered corpus. */
   private[graft] def d7PairsOf(corpus: DataFrame, numPlanes: Int,
       numTables: Int, tau: Double): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     // one signature pass feeds both tiers: n·L rows of longs,
     // checkpointed eagerly (the d6 lineage discipline)
     val sigs = graft.sim.Similarity
@@ -981,7 +980,6 @@ object Dedup {
     * expected answer as the brute-force τ-filter over the same
     * planted corpus. */
   def d7DedupEmbeddingLsh(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val base = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val planted = base.filter(col("vec_id") % D7PlantStride === 0)
       .select((col("vec_id") + D7PlantOffset).as("vec_id"),
@@ -1112,7 +1110,6 @@ object Dedup {
     * rule keeps the original. The DuckDB oracle states that
     * closed-form answer. */
   def d9SemanticDedup(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val base = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val planted = base.filter(col("vec_id") % D9PlantStride === 0)
       .select((col("vec_id") + D9PlantOffset).as("vec_id"),
@@ -1126,7 +1123,6 @@ object Dedup {
   private[graft] def d9KeepList(corpus: DataFrame, tau: Double)
       : DataFrame = {
     import graft.sim.Similarity
-    GraftFunctions.register(corpus.sparkSession)
     val total = corpus.count()
     val (cells, _) = Similarity.n3AutoDial(total)
     val cents = Similarity.fitCentroids(corpus, cells, total)
@@ -1183,7 +1179,6 @@ object Dedup {
     * pathologically self-similar). Emits (doc, span) rows:
     * span_start/span_end are 0-based token offsets, inclusive. */
   def d10SubstringSpans(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val k = 8
     val wins = Tables.documents(s, dir)
       .select(col("doc_id"), expr(s"ngrams(text, $k)"))

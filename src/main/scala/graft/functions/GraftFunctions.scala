@@ -1,18 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.expr
 
-/** Registration for graft's native Catalyst expressions.
+/** Graft's native Catalyst expressions under their SQL names.
   *
-  * Two paths:
-  *  - library user: `SparkSession.builder.withExtensions(new
-  *    GraftExtensions)` registers `float_cosine` permanently;
-  *  - ad hoc: `GraftFunctions.register(spark)` installs it into the
-  *    session's function registry (idempotent), after which
-  *    `expr("float_cosine(a, b)")` / SQL both resolve it.
+  * [[graft.GraftExtensions]] registers every entry of [[functions]]:
+  * at build time in the sessions it builds or that name it in
+  * `spark.sql.extensions`, and through `GraftExtensions.install` in a
+  * session built elsewhere. Once registered, `expr("float_cosine(a,
+  * b)")` and SQL both resolve them.
   */
 object GraftFunctions {
   /** `stopword_count`'s word list arrives as a foldable string
@@ -33,50 +31,31 @@ object GraftFunctions {
         s"expected a foldable int literal, got $other")
     }
 
-  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "float_cosine" -> (exprs => FloatCosine(exprs(0), exprs(1))),
-    "token_count" -> (exprs => TokenCount(exprs(0))),
-    "stopword_count" ->
-      (exprs => StopwordCount(exprs(0), literalWords(exprs(1)))),
-    "ngrams" -> (exprs => NGramGenerator(exprs(0), literalInt(exprs(1)))),
-    "ngrams_distinct" -> (exprs =>
+  /** (SQL name, the expression class its `ExpressionInfo` names,
+    * builder). */
+  val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("float_cosine", classOf[FloatCosine],
+      exprs => FloatCosine(exprs(0), exprs(1))),
+    ("token_count", classOf[TokenCount], exprs => TokenCount(exprs(0))),
+    ("stopword_count", classOf[StopwordCount],
+      exprs => StopwordCount(exprs(0), literalWords(exprs(1)))),
+    ("ngrams", classOf[NGramGenerator],
+      exprs => NGramGenerator(exprs(0), literalInt(exprs(1)))),
+    ("ngrams_distinct", classOf[NGramGenerator], exprs =>
       NGramGenerator(exprs(0), literalInt(exprs(1)), distinct = true)),
-    "distinct_ngram_count" ->
-      (exprs => DistinctNgramCount(exprs(0), literalInt(exprs(1)))),
-    "t_test_p" -> (exprs => TTestPValue(exprs(0), exprs(1))),
-    "chi2_p" -> (exprs => ChiSquarePValue(exprs(0), exprs(1))),
-    "jaro_winkler" ->
-      (exprs => JaroWinklerSimilarity(exprs(0), exprs(1))))
+    ("distinct_ngram_count", classOf[DistinctNgramCount],
+      exprs => DistinctNgramCount(exprs(0), literalInt(exprs(1)))),
+    ("t_test_p", classOf[TTestPValue],
+      exprs => TTestPValue(exprs(0), exprs(1))),
+    ("chi2_p", classOf[ChiSquarePValue],
+      exprs => ChiSquarePValue(exprs(0), exprs(1))),
+    ("jaro_winkler", classOf[JaroWinklerSimilarity],
+      exprs => JaroWinklerSimilarity(exprs(0), exprs(1))))
 
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
-  /** `float_cosine` as a Column over two column names/paths (requires
-    * `register(spark)` or the extensions to have run). */
+  /** `float_cosine` as a Column over two column names/paths. It
+    * resolves in any session that has graft's extensions, which every
+    * `SparkEntry` query and every session built by
+    * `GraftExtensions.session` has. */
   def floatCosine(a: String, b: String): Column =
     expr(s"float_cosine($a, $b)")
-}
-
-/** SparkSessionExtensions entry point (spark.sql.extensions=
-  * graft.functions.GraftExtensions). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private val infoClass: Map[String, String] = Map(
-    "float_cosine" -> classOf[FloatCosine].getName,
-    "token_count" -> classOf[TokenCount].getName,
-    "stopword_count" -> classOf[StopwordCount].getName,
-    "ngrams" -> classOf[NGramGenerator].getName,
-    "ngrams_distinct" -> classOf[NGramGenerator].getName,
-    "distinct_ngram_count" -> classOf[DistinctNgramCount].getName,
-    "t_test_p" -> classOf[TTestPValue].getName,
-    "chi2_p" -> classOf[ChiSquarePValue].getName,
-    "jaro_winkler" -> classOf[JaroWinklerSimilarity].getName)
-
-  override def apply(e: SparkSessionExtensions): Unit =
-    GraftFunctions.functions.foreach { case (name, builder) =>
-      e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(infoClass(name), name), builder))
-    }
 }

@@ -190,7 +190,6 @@ object Aggregates {
     * the CDF against closed forms. Plan cost over g10: one extra
     * codegen'd projection on 28 rows. */
   def g10bCorrTest(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // df comes from g10's per-pair complete-observation count, so the
     // p-value's degrees of freedom always agree with the t it is
     // paired with (a global count(*) would disagree under NULLs).
@@ -215,7 +214,6 @@ object Aggregates {
     * (the 'neg' fixture flips y's sign). g10b's 28-pair surface
     * stays rows-only; this value-gates its p plumbing. */
   def g10cCorrTestGate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val b = Tables.region(s, dir)
       .filter(col("r_regionkey") < 4)
       .select(col("r_regionkey").cast("double").as("x"),

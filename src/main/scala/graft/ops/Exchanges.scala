@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * length), and the IVF-PQ ADC scan behind n6/n7/n8 (cost =
   * queries × probes × cell size over 20 B/row codes). Measured at
   * gate SF: AQE squeezed d8's 17 MB pair exchange to 4 tasks holding
-  * ~15 s of summed CPU while 28 cores idled (tools/ScaleProbe), and
+  * ~15 s of summed CPU while 28 cores idled (OPTIMIZATION_r14.md), and
   * would run the whole ADC scan in ONE task off a 105 KB code
   * exchange. Such exchanges repartition with an EXPLICIT count —
   * user-specified widths are final, AQE cannot coalesce them.

@@ -233,7 +233,6 @@ object Joins {
     * expression rides a d2b/LSH-style blocking join; here the
     * vocabulary self-join IS the blocked candidate set. */
   def j11JaroWinklerJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val names = Tables.part(s, dir).select("p_brand", "p_name").distinct()
     val jw = expr("jaro_winkler(a.p_name, b.p_name)")
     names.as("a").join(names.as("b"),

@@ -71,13 +71,18 @@ object Rounds {
     * no-op (review finding r9, verified against Spark 4.1.2:
     * getPersistentRDDs kept the entry after ds.unpersist). So
     * release pattern-matches the materialized plan's LogicalRDD and
-    * unpersists its RDD directly; RoundsSpec pins that the
+    * frees its RDD's blocks directly; RoundsSpec pins that the
     * persistent-RDD entry is actually gone. For a RELIABLE
-    * checkpoint the RDD holds no blocks and this is harmless. */
+    * checkpoint the RDD holds no blocks and this is harmless.
+    *
+    * The blocks go through `GraftSqlShims.unpersistRDD`, not
+    * `RDD.unpersist`: the latter logs a WARN on every locally
+    * checkpointed RDD, whose lineage is gone — which is exactly the
+    * intended case here. */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        org.apache.spark.sql.GraftSqlShims.unpersistRDD(lr.rdd)
       case _ => ()
     }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.Dedup
-import graft.functions.GraftFunctions
 import graft.ops.Det
 import graft.text.{BpeMerges, SequencePacking, TextAnalysis}
 
@@ -69,7 +68,6 @@ object CurationPipeline {
     * ending in the curated multilingual corpus: (doc_id, lang, text,
     * n_tokens). */
   private[graft] def survivedPlan(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val docs = Tables.documents(s, dir)
     // stage 1 — per-row gates (x2's quality composite; n >= 10).
     // token/stopword counts are the codegen'd kernels; everything

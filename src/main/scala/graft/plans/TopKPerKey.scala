@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, RowNumber, SortOrder, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -13,10 +13,13 @@ import org.apache.spark.sql.types.IntegerType
   *
   * This is the whole-operator extension path of SURVEY.md §7: a custom
   * `LogicalPlan` planned by [[TopKStrategy]] into a partial/final
-  * [[TopKPerKeyExec]] pair, reachable three ways — the
-  * [[TopK.topKPerKey]] DSL, the [[RewriteRankFilterToTopK]] optimizer
-  * rule (rewrites the `row_number() <= k` idiom, reference R:238/R:531
-  * arrange-then-head shape), or builder-time [[GraftExtensions]].
+  * [[TopKPerKeyExec]] pair, reachable two ways — the
+  * [[TopK.topKPerKey]] DSL, or the [[RewriteRankFilterToTopK]]
+  * optimizer rule (rewrites the `row_number() <= k` idiom, reference
+  * R:238/R:531 arrange-then-head shape). [[graft.GraftExtensions]]
+  * gives a session both the strategy and the rule, at build time or
+  * through `install`, so the rule applies from the session's first
+  * query.
   */
 case class TopKPerKey(
     keys: Seq[Expression],
@@ -97,37 +100,18 @@ object RewriteRankFilterToTopK extends Rule[LogicalPlan] {
   }
 }
 
-/** Builder-time registration:
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => TopKStrategy)
-    ext.injectOptimizerRule(_ => RewriteRankFilterToTopK)
-  }
-}
-
 /** DSL + oracle-gated query for the custom operator. */
 object TopK {
-
-  /** Idempotently attach strategy + rewrite rule to an existing
-    * session (the driver owns session construction, so builder-time
-    * extensions are not always available). */
-  def register(spark: SparkSession): Unit = {
-    val exp = GraftSqlShims.experimental(spark)
-    if (!exp.extraStrategies.contains(TopKStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
-    if (!exp.extraOptimizations.contains(RewriteRankFilterToTopK))
-      exp.extraOptimizations = exp.extraOptimizations :+ RewriteRankFilterToTopK
-  }
 
   /** Keep the best `k` rows per `keys` group under `order` (best =
     * first in sort order; pass a unique tie-break column for
     * determinism). Scale note: pre-`select` the columns you need —
-    * the node's output is its child's full schema. */
+    * the node's output is its child's full schema. The frame's session
+    * gets graft's extensions first ([[graft.GraftExtensions.install]]):
+    * the node plans only through [[TopKStrategy]]. */
   def topKPerKey(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int): DataFrame = {
     val spark = df.sparkSession
-    register(spark)
+    graft.GraftExtensions.install(spark)
     val sortOrder = order.map(GraftSqlShims.expression).map {
       case so: SortOrder => so
       case e => SortOrder(e, Ascending)

@@ -65,7 +65,6 @@ object HybridRetrieval {
   private val tokens = split(col("text"), " ")
 
   def x47HybridRetrieval(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val queryIds = emb.filter(col("vec_id") % 50 === 0)

@@ -75,7 +75,6 @@ object MmrRerank {
   }
 
   def n11MmrRerank(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     import s.implicits._
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val queries = emb.filter(col("vec_id") % 50 === 0)

@@ -45,7 +45,6 @@ object Similarity {
     * loop per pair inside WholeStageCodegen, bit-identical to the
     * oracle's norm-then-divide SQL (index-order accumulation). */
   def n1SimTopkBruteforce(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir)
     val queries = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("embedding"))
@@ -86,7 +85,6 @@ object Similarity {
     * the planted leaks at cosine 1.0. */
   def x49SemanticDecontamination(s: SparkSession, dir: String)
       : DataFrame = {
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val bench = emb.filter(col("vec_id") % 50 === 0)
     val leaked = bench.select(
@@ -122,7 +120,6 @@ object Similarity {
     * on label, never the nested-loop cross join n1's truth baseline
     * pays. */
   def n10FilteredTopk(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir)
     val queries = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -275,7 +272,6 @@ object Similarity {
 
   private[graft] def n2Impl(s: SparkSession, dir: String,
       numPlanes: Int, numTables: Int): DataFrame = {
-    GraftFunctions.register(s)
     val buckets = n2Buckets(s, dir, numPlanes, numTables)
     val qBuckets = buckets.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("table_id"), col("bucket"))
@@ -379,7 +375,7 @@ object Similarity {
     * cos(v,c) ≤ 1 − max(0, ‖v̂−ĝ‖−r_g)²/2 — was built, spec-proven
     * equal to this flat scan on every corpus vector, and then
     * MEASURED to prune nothing: scan fraction 1.000 over 10k sf10
-    * vectors (tools/N8Probe). At 64 dims the fitted centroids are
+    * vectors (OPTIMIZATION_r13.md). At 64 dims the fitted centroids are
     * near-isotropic (⌈√cells⌉ groups of unit centroids carry radii
     * ≈ √2, so every group's bound clears every best-so-far) — metric
     * pruning needs low dimension or tight cluster structure, and
@@ -458,7 +454,6 @@ object Similarity {
   private[graft] def ivfTopkOf(s: SparkSession, embIn: DataFrame,
       queryPred: org.apache.spark.sql.Column, k: Int,
       probesOverride: Option[Int] = None): DataFrame = {
-    GraftFunctions.register(s)
     import s.implicits._
     val emb = embIn.select("vec_id", "embedding")
     val total = emb.count()
@@ -649,7 +644,6 @@ object Similarity {
     * planted gate (the ivfTopkOf factoring, one tier down). */
   private def pqTopkOf(s: SparkSession, embIn: DataFrame,
       queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
-    GraftFunctions.register(s)
     import s.implicits._
     val emb = embIn.select("vec_id", "embedding")
     val total = emb.count()
@@ -898,7 +892,7 @@ object Similarity {
     * index, and each query batch pays only routing + nprobe/cells of
     * the compressed codes. Honest exponent, r13 correction: the r12
     * ladder blamed n8's 13.2×-per-decade on the O(n·cells) build
-    * assignment — the leg-by-leg probe (tools/N8Probe) FALSIFIED
+    * assignment — the leg-by-leg probe (BASELINE.md) FALSIFIED
     * that at sf10: fit 6.5 s + encode 9.0 s vs serve 439.5 s. The
     * payer was the serve leg's candidate mass under the old
     * ¼-of-cells probe fraction (n/4 probed codes per query × n/25
@@ -907,7 +901,6 @@ object Similarity {
     * √-growth probe branch, recall re-measured ≥ the 0.6 floor at
     * sf10. */
   def n8IndexServe(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     import s.implicits._
     import graft.sources.SnapshotStore
     val base = Tables.embeddings(s, dir).select("vec_id", "embedding")
@@ -971,7 +964,6 @@ object Similarity {
     * n7's contract but through the append path: fit never saw the
     * queries, and the answers come off the merged on-disk table. */
   def n9IndexDeltaMerge(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     import s.implicits._
     import graft.sources.SnapshotStore
     val base = Tables.embeddings(s, dir).select("vec_id", "embedding")
@@ -1044,7 +1036,6 @@ object Similarity {
       dir: String, tag: String,
       probesOverride: Option[Int] = None,
       rerankOverride: Option[Int] = None): DataFrame = {
-    GraftFunctions.register(s)
     val emb = embIn.select("vec_id", "embedding")
     val total = emb.count()
     val model = fitIvfPqCached(s, emb, total, dir, tag)

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Tables
-import graft.functions.GraftFunctions
 import graft.text.TextAnalysis
 
 /** Streaming corpus curation — the x6 pipeline as a continuous job:
@@ -27,7 +26,6 @@ object CurationStream {
 
   def start(s: SparkSession, dir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    GraftFunctions.register(s)
     val gated = TextAnalysis.curationGates(Tables.documentsStream(s, dir))
     gated.writeStream
       .option("checkpointLocation", checkpointDir)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Tables
-import graft.functions.GraftFunctions
 import graft.text.TextAnalysis
 
 /** Streaming distribution-drift monitor — x28's PSI gate run
@@ -40,7 +39,6 @@ object DriftStream {
     * id. */
   def start(s: SparkSession, dir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    GraftFunctions.register(s)
     val ref = refCounts(s, dir).cache()
     val cand = Tables.documentsStream(s, dir)
       .filter(substring(col("source"), 4, 10).cast("int") >= 10)

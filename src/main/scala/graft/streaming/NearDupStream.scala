@@ -78,7 +78,6 @@ object NearDupStream {
     * miss). */
   def semanticGate(newRows: DataFrame, benchmark: DataFrame,
       threshold: Double = 0.9): DataFrame = {
-    graft.functions.GraftFunctions.register(newRows.sparkSession)
     val leaked = newRows
       .select(col("vec_id"), col("embedding").as("c_embedding"))
       .crossJoin(broadcast(

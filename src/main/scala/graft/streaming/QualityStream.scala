@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Tables
-import graft.functions.GraftFunctions
 import graft.ops.Expectations
 import graft.ops.Expectations.Expectation
 import graft.text.TextAnalysis
@@ -33,7 +32,6 @@ object QualityStream {
 
   def start(s: SparkSession, dir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    GraftFunctions.register(s)
     val profiled = TextAnalysis.repetitionProfile(
       TextAnalysis.mixtureFilter(Tables.documentsStream(s, dir)))
     profiled.writeStream
@@ -74,7 +72,6 @@ object QualityStream {
     * nothing shuffles. */
   def startGated(s: SparkSession, dir: String, outDir: String,
       quarDir: String, checkpointDir: String): StreamingQuery = {
-    GraftFunctions.register(s)
     Tables.documentsStream(s, dir).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], id: Long) =>

@@ -4,7 +4,6 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** X8 — sequence packing: assemble tokenized documents into
   * fixed-token-budget training sequences, the step between a curated
@@ -138,7 +137,6 @@ object SequencePacking {
     * form). PackingSpec additionally pins the invariants (budget
     * respected, every doc exactly once, waste bound). */
   def x8SequencePacking(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val docs = Tables.documents(s, dir).select(col("doc_id"),
       expr("token_count(text)").cast("long").as("n_tokens"))
     packSequencesGrouped(docs, maxTokens = 512, numGroups = 8)

@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions
 import graft.ops.Det
 
 /** Text-analysis operators over the `documents` table — the
@@ -47,7 +46,6 @@ object TextAnalysis {
   /** X1 — token counting: whitespace tokens + regex (BPE-ish
     * word/number/symbol) tokens. */
   def x1TextTokens(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.documents(s, dir).select(
       col("doc_id"),
       nTokens.cast("bigint").as("n_ws_tokens"),
@@ -69,7 +67,6 @@ object TextAnalysis {
     * composite quality score. Single-space-joined text means total
     * token chars = length - (n-1). */
   def x2TextQuality(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val n = nTokens.cast("double")
     val stopRatio = stopCount(stopEn).cast("double") / n
     val avgTokLen = (length(col("text")).cast("double") - n + 1.0) / n
@@ -87,7 +84,6 @@ object TextAnalysis {
     * the operator, not accuracy). Deterministic argmax with fixed
     * tiebreak order en > de > es > fr. */
   def x3TextLangid(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val (en, de, es, fr) =
       (stopCount(stopEn), stopCount(stopDe), stopCount(stopEs),
         stopCount(stopFr))
@@ -125,14 +121,13 @@ object TextAnalysis {
     * cross the single exchange; no full-table window shuffle-sort).
     * At 100 TB: one scan + one shuffle, nothing else. */
   def x6CorpusCuration(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     fingerprintDedup(curationGates(Tables.documents(s, dir)))
   }
 
   /** The STATELESS half of x6 — per-row gates (length, quality,
     * language), safe in a streaming query with no watermark; also the
-    * per-row stage of the batch curation. Caller must have run
-    * `GraftFunctions.register` on the session. */
+    * per-row stage of the batch curation. The frame's session must
+    * have graft's extensions (see `graft.GraftExtensions`). */
   private[graft] def curationGates(docs: DataFrame): DataFrame = {
     val n = nTokens.cast("double")
     val stopRatio = stopCount(stopEn).cast("double") / n
@@ -232,7 +227,6 @@ object TextAnalysis {
     * array column. Oracle re-derives the windows with a lateral
     * unnest over generate_series. */
   def x10Ngrams(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), expr("ngrams(text, 3)"))
       .select(col("doc_id"), col("ngram"), col("pos"))
@@ -345,7 +339,6 @@ object TextAnalysis {
     * operation identically in the DuckDB oracle. Docs shorter than
     * two tokens have no bigrams and drop out on both sides. */
   def x33BigramNll(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val docs = Tables.documents(s, dir)
     val bg = docs.select(col("doc_id"), expr("ngrams(text, 2)"))
       .select(col("doc_id"),
@@ -385,7 +378,6 @@ object TextAnalysis {
   }
 
   def x13Contamination(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     def grams(df: DataFrame): DataFrame =
       df.select(col("doc_id"), expr("ngrams_distinct(text, 4)"))
         .select("doc_id", "ngram")
@@ -550,7 +542,6 @@ object TextAnalysis {
     * balance evidence a shard-writer logs); balance follows from the
     * mix behaving uniformly over dense key ranges. */
   def x17TrainingShards(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), nTokens.as("n_tok"),
         (shiftright(col("doc_id") * 2654435761L, 16) % 32).as("shard"))
@@ -594,7 +585,6 @@ object TextAnalysis {
     * path — TextKernelsSpec pins kernel==HOF equality and the WSCG
     * plan). */
   def x15Repetition(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     repetitionProfile(Tables.documents(s, dir))
   }
 
@@ -768,7 +758,6 @@ object TextAnalysis {
     * PSI term to an integer at 1e-10 before the (exact, integer)
     * sum — both engines add identical longs in any order. */
   def x28DistributionDrift(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val docs = Tables.documents(s, dir)
       .select(
         when(substring(col("source"), 4, 10).cast("int") < 10, "ref")
@@ -1005,7 +994,6 @@ object TextAnalysis {
     * a fat aggregation cell, never a quadratic blow-up. Docs under
     * 3 tokens have no grams and drop out on both sides. */
   def x41NoveltyScore(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"), expr("ngrams_distinct(text, 3)"))
       .select("doc_id", "ngram")
@@ -1117,7 +1105,6 @@ object TextAnalysis {
     * variant here is possible because the score itself is already
     * quantized. */
   def x43BudgetCuration(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val scored = Tables.documents(s, dir).select(
       col("doc_id"),
@@ -1167,7 +1154,6 @@ object TextAnalysis {
     * sort. Join fan-out per gram is bounded by the benchmark's size,
     * not the corpus's. */
   def x45FuzzyDecontamination(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     def grams(df: DataFrame): DataFrame =
       df.select(col("doc_id"), expr("ngrams_distinct(text, 4)"))
         .select("doc_id", "ngram")
@@ -1206,7 +1192,6 @@ object TextAnalysis {
     * doc_id%7=5 slice, adds the %7=3 slice (absent from v0), and
     * appends one token to every %7=1 doc. */
   def x46CorpusDiff(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val docs = Tables.documents(s, dir)
     val v0 = docs.filter(col("doc_id") % 7 =!= 3).select(col("doc_id"),
       nTokens.cast("long").as("t0"), md5(col("text")).as("h0"))

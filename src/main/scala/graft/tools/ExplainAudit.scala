@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftExtensions, SparkEntry}
 
 /** Dev tool: dump formatted physical plans for a set of queries so
   * pushdown / broadcast / codegen can be audited (`runMain
@@ -16,14 +15,7 @@ object ExplainAudit {
         "e1_stream_tumbling", "d2_dedup_ngram_jaccard",
         "j5_asof_join", "j6_range_join", "x6_corpus_curation",
         "x7_token_vocab", "g14_rollup", "w1_running_window")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftExtensions.session(GraftExtensions.cores)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftExtensions
 import graft.sim.Similarity
 
 /** Dev tool: measures ANN recall vs the n1 brute-force ground truth
@@ -11,15 +11,7 @@ import graft.sim.Similarity
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftExtensions.session(GraftExtensions.cores)
 
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("q_id", "neighbor_id").collect()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator: replicate the sf0.1 star schema
@@ -52,15 +52,8 @@ object ScaleUp {
     val (src, dst, factor) = (args(0), args(1), args(2).toInt)
     val wanted: String => Boolean =
       if (args.length > 3) args(3).split(',').toSet else _ => true
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session(graft.GraftExtensions.cores,
+      "spark.sql.shuffle.partitions" -> "32")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(df: => DataFrame, t: String): Unit =

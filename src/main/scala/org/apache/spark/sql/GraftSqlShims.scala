@@ -26,19 +26,6 @@ object GraftSqlShims {
   def experimental(spark: SparkSession): ExperimentalMethods =
     spark.asInstanceOf[ClassicSparkSession].experimental
 
-  /** Materialize the planner strategies an extensions object would
-    * inject at session build time (`buildPlannerStrategies` is
-    * `private[sql]`) — lets tests assert builder-time registration
-    * without tearing down the shared test SparkContext. */
-  def plannerStrategies(ext: SparkSessionExtensions,
-      spark: SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
-    ext.buildPlannerStrategies(spark)
-
-  /** Same for injected optimizer rules. */
-  def optimizerRules(ext: SparkSessionExtensions, spark: SparkSession)
-      : Seq[org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]] =
-    ext.buildOptimizerRules(spark)
-
   /** Column → catalyst Expression, EAGERLY converted (Spark 4 Columns
     * wrap ColumnNodes; `ExpressionUtils.expression` only wraps lazily
     * in a non-serializable `ColumnNodeExpression`, so a hand-built
@@ -54,4 +41,11 @@ object GraftSqlShims {
     * session do not reach the other. */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[ClassicSparkSession].cloneSession()
+
+  /** Frees `rdd`'s cached blocks without blocking and forgets it as
+    * persisted, as `RDD.unpersist` does, but without its WARN for a
+    * locally checkpointed RDD (`SparkContext.unpersistRDD` is
+    * `private[spark]`). */
+  def unpersistRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

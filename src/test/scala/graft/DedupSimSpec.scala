@@ -101,8 +101,6 @@ class DedupSimSpec extends SparkTestBase {
   }
 
   test("d9 cell sizes stay within the pair-cost bound the dial promises") {
-    import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val corpus = Tables.embeddings(spark, sfSmoke)
       .select("vec_id", "embedding")
     val total = corpus.count()
@@ -697,7 +695,6 @@ class DedupSimSpec extends SparkTestBase {
     // where the oracle actually runs), so premise drift fails here
     // before the oracle silently would.
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     Seq(sfTest, "/root/testdata/sf0.1").foreach { dir =>
       val emb = Tables.embeddings(spark, dir)
         .select("vec_id", "embedding")

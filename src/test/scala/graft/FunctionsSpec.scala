@@ -9,7 +9,6 @@ import graft.functions.{GraftFunctions, JaroWinkler, WeightedMedian}
 class FunctionsSpec extends SparkTestBase {
 
   test("float_cosine equals the HOF cosine bit-for-bit on embeddings") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfTest).limit(100)
     val hof = emb.as("q").crossJoin(emb.as("v"))
       .select(col("q.vec_id").as("a"), col("v.vec_id").as("b"),
@@ -35,7 +34,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("float_cosine resolves from SQL and handles nulls/self-similarity") {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, sfSmoke).createOrReplaceTempView("emb_fn_test")
     val self = spark.sql(
       "SELECT float_cosine(embedding, embedding) AS c FROM emb_fn_test")
@@ -46,7 +44,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("float_cosine: zero-norm and length-mismatch yield NULL, not NaN") {
-    GraftFunctions.register(spark)
     // codegen path (column input) and interpreted path (literal fold)
     // must both null out instead of emitting 0/0 = NaN — NaN sorts
     // ABOVE every double and would falsely rank first in top-k desc.
@@ -129,7 +126,6 @@ class FunctionsSpec extends SparkTestBase {
       ("abcdzzzzzzzz", "abcdyyyyyyyyyyyyyyyyyy", 0.5050505050505051),
       ("hello world", "hello wrold", 0.9818181818181818),
       ("prefix_same_long", "prefix_same_lnog", 0.9874999999999999))
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // through the EXPRESSION (codegen path), not the static kernel
     val got = cases.map { case (a, b, _) => (a, b) }.toDF("a", "b")

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.GraftFunctions
-
 /** Graft's own Catalyst expressions give the same bits interpreted as
   * compiled: each is evaluated on the same rows in the test session
   * (whole-stage codegen) and in a child session with
@@ -56,7 +54,6 @@ class InterpretedEvalSpec extends SparkTestBase {
 
   /** (scalar rows, n-gram rows, executed plan) of `s`, by id. */
   private def evaluate(s: SparkSession): (Seq[Seq[Any]], Seq[Seq[Any]], String) = {
-    GraftFunctions.register(s)
     val df = frame(s)
     val projected = df.select(col("id") +: scalars.map(expr): _*)
     val grams = df.select(col("id"), expr("ngrams(text, 2)"))

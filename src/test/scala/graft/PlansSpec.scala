@@ -23,9 +23,9 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("topKPerKey matches the window-rank formulation") {
-    // ground truth keeps the rank column so the rewrite rule (already
-    // registered on the shared session by any earlier test) cannot
-    // replace it with the operator under test; drop rank driver-side.
+    // ground truth keeps the rank column so the rewrite rule (on the
+    // session from its first query) cannot replace it with the
+    // operator under test; drop rank driver-side.
     val w = Window.partitionBy("o_orderpriority")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
     val expected = Tables.orders(spark, sfTest)
@@ -76,7 +76,6 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("optimizer rule rewrites row_number<=k filter into TopKPerKeyExec") {
-    TopK.register(spark)
     val s = physicalString(windowFormulation)
     assert(s.split("TopKPerKey \\[").length - 1 == 2,
       s"rank-filter idiom should plan via the custom operator:\n$s")
@@ -91,13 +90,15 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("GraftExtensions injects the strategy and rule at builder time") {
-    import org.apache.spark.sql.{GraftSqlShims, SparkSessionExtensions}
+    import org.apache.spark.sql.{GraftTestShims, SparkSessionExtensions}
     val ext = new SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(ext)
-    assert(GraftSqlShims.plannerStrategies(ext, spark)
+    new GraftExtensions().apply(ext)
+    assert(GraftTestShims.plannerStrategies(ext, spark)
       .contains(graft.plans.TopKStrategy))
-    assert(GraftSqlShims.optimizerRules(ext, spark)
+    assert(GraftTestShims.optimizerRules(ext, spark)
       .contains(graft.plans.RewriteRankFilterToTopK))
+    assert(GraftTestShims.injectedFunctions(ext) ==
+      functions.GraftFunctions.functions.map(_._1).toSet)
   }
 
   test("s19 latest-by-key: one row per user, the newest, via the operator") {
@@ -119,7 +120,6 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("rule leaves the plan alone when the rank column is kept") {
-    TopK.register(spark)
     val w = Window.partitionBy("o_orderpriority")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
     val keepsRank = Tables.orders(spark, sfSmoke)

@@ -6,18 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local SparkSession for the whole test JVM (suites share
   * it via getOrCreate — Spark session startup dominates test time). */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftExtensions.session(4)
 
   val sfSmoke = "/root/testdata/sf0.001"
   val sfTest = "/root/testdata/sf0.01"

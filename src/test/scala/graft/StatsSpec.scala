@@ -95,7 +95,6 @@ class StatsSpec extends SparkTestBase {
   test("t_test_p expression == Stats kernel, inside WholeStageCodegen") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
-    functions.GraftFunctions.register(spark)
     // spark.range (not a local Seq): ConvertToLocalRelation would
     // constant-fold a foldable projection into the LocalTableScan,
     // and the point here is to drive the GENERATED code path
@@ -157,7 +156,6 @@ class StatsSpec extends SparkTestBase {
   test("chi2_p expression == Stats kernel, inside WholeStageCodegen") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
-    functions.GraftFunctions.register(spark)
     val df = spark.range(8)
       .select((col("id").cast("double") * 2.5 + 0.25).as("x2"),
         (col("id").cast("double") + 1.0).as("dof"))

@@ -197,7 +197,6 @@ class StreamingSpec extends SparkTestBase {
     val streamedQuar = IdempotentSink.readOutput(spark, quarDir)
       .drop("batch_id")
     // batch twins through the IDENTICAL expectation set
-    functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sfSmoke)
     val batchClean = text.TextAnalysis.repetitionProfile(
       text.TextAnalysis.mixtureFilter(graft.ops.Expectations.clean(
@@ -233,7 +232,6 @@ class StreamingSpec extends SparkTestBase {
     val streamed = IdempotentSink.readOutput(spark, outDir)
       .drop("batch_id")
     // batch twin: x15 metrics over the x14-kept docs
-    functions.GraftFunctions.register(spark)
     val kept = text.TextAnalysis.x14MixtureSample(spark, sfSmoke)
       .select("doc_id")
     val batch = text.TextAnalysis.x15Repetition(spark, sfSmoke)

@@ -2,7 +2,6 @@ package graft
 // (NGramGenerator UDTF tests live at the bottom of this suite)
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 import graft.text.TextAnalysis
 
 /** The codegen'd text kernels must agree byte-for-byte with the
@@ -13,14 +12,12 @@ class TextKernelsSpec extends SparkTestBase {
 
   private lazy val edges = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq("", " ", "a", "a b", "a  b", " a b ", "the", "the the  the",
       "thé the", "한국어 the 텍스트", "a,b the", "la le la")
       .toDF("text")
   }
 
   test("token_count == size(split) on corpus and edges") {
-    GraftFunctions.register(spark)
     val corpus = Tables.documents(spark, sfTest)
       .select(expr("token_count(text)").as("k"),
         size(split(col("text"), " ")).as("h"))
@@ -36,7 +33,6 @@ class TextKernelsSpec extends SparkTestBase {
   }
 
   test("stopword_count == size(filter(split)) on corpus and edges") {
-    GraftFunctions.register(spark)
     def hof(ws: Seq[String]) = expr(
       s"size(filter(split(text, ' '), t -> t IN " +
         ws.map(w => s"'$w'").mkString("(", ", ", ")") + "))")
@@ -70,7 +66,6 @@ class TextKernelsSpec extends SparkTestBase {
     } yield lead + toks.mkString(" ") + trail
     val texts = (1L to 200L).map(s => sample(textGen, s))
     import spark.implicits._
-    GraftFunctions.register(spark)
     val en = Seq("the", "a", "and", "of", "to", "in", "is", "on")
     val cmp = texts.toDF("text").select(
       expr("token_count(text)").as("tk"),
@@ -91,7 +86,6 @@ class TextKernelsSpec extends SparkTestBase {
   }
 
   test("distinct_ngram_count == array_distinct HOF on corpus and edges") {
-    functions.GraftFunctions.register(spark)
     def hof(n: Int) =
       if (n == 1) org.apache.spark.sql.functions.size(
         org.apache.spark.sql.functions.array_distinct(
@@ -127,7 +121,6 @@ class TextKernelsSpec extends SparkTestBase {
 
   test("ngrams UDTF plans a Generate and matches the shingle kernel") {
     import spark.implicits._
-    functions.GraftFunctions.register(spark)
     val df = TextAnalysis.x10Ngrams(spark, sfSmoke)
     assert(df.queryExecution.executedPlan.toString.contains("Generate"),
       "a Generator must plan through GenerateExec")
@@ -152,7 +145,6 @@ class TextKernelsSpec extends SparkTestBase {
 
   test("ngrams keeps empty tokens like Catalyst split / string_split") {
     import spark.implicits._
-    functions.GraftFunctions.register(spark)
     // "a b c " splits (limit -1) to [a, b, c, ""] → TWO 3-windows;
     // Java's default split drops the trailing empty and would emit one
     val df = Seq((1L, "a b c "), (2L, " x y")).toDF("doc_id", "text")
@@ -170,7 +162,6 @@ class TextKernelsSpec extends SparkTestBase {
   }
 
   test("ngrams rejects non-string input at analysis time") {
-    functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1L, "a b c")).toDF("doc_id", "text")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
@@ -182,7 +173,6 @@ class TextKernelsSpec extends SparkTestBase {
 
   test("ngrams_distinct dedups row-locally, keeps first pos, no exchange") {
     import spark.implicits._
-    functions.GraftFunctions.register(spark)
     val docs = Seq((1L, "a b a b a b"), (2L, "x y z")).toDF("doc_id", "text")
     val out = docs.select(col("doc_id"), expr("ngrams_distinct(text, 2)"))
     val rows = out.collect().map(r =>
