@@ -46,14 +46,11 @@ object SessionCaches {
   /** Drop cross-query state a long multi-query session accumulates:
     * catalog-cached relations (recompute lazily — safe) and every
     * persistent RDD not pinned above, including dead single-query
-    * checkpoints. Returns the storage bytes still resident after —
-    * the legitimate session-cache footprint. */
-  def scrub(spark: SparkSession): Long = {
+    * checkpoints. */
+  def scrub(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!pinned.contains(id)) rdd.unpersist(blocking = true)
     }
-    spark.sparkContext.getExecutorMemoryStatus.valuesIterator
-      .map { case (max, remaining) => max - remaining }.sum
   }
 }

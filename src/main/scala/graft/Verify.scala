@@ -46,8 +46,8 @@ object Verify {
   /** JSON string escape: backslash, quote, and ALL control chars
     * (< 0x20) — a tab or CR in a query's oracle SQL would otherwise
     * make `json.load` of `oracle_sql.json` fail and silently zero the
-    * correctness check. Bench's warn flag goes through it too. */
-  private[graft] def q(s: String): String = "\"" + s.flatMap {
+    * correctness check. */
+  private def q(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

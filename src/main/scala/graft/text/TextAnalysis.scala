@@ -822,7 +822,7 @@ object TextAnalysis {
     val grid = Seq("n_chars", "n_tokens")
       .flatMap(f => (0 until DriftBins).map(b => (f, b.toLong)))
       .toDF("feature", "bin")
-    val full = broadcast(grid)
+    val full = grid
       .join(counts, Seq("feature", "bin"), "left")
       .na.fill(0L, Seq("nr", "nc"))
     val tot = full.groupBy("feature")
